@@ -35,6 +35,7 @@ from simple_data_workflow_spark.functions.vectors import (
     nearest_centroids_pd,
 )
 from simple_data_workflow_spark.llmdata.similarity import fit_ivf_centroids
+from simple_data_workflow_spark.smalldf import small_df
 from simple_data_workflow_spark.sources.tablelog import (
     table_commit,
     table_read,
@@ -42,18 +43,12 @@ from simple_data_workflow_spark.sources.tablelog import (
 )
 
 
-def _model_df(
-    spark: SparkSession, rows: list, columns: list[str], schema: str
-) -> DataFrame:
-    """Bounded model rows (centroids, codebooks) as a DataFrame via the
-    pandas/Arrow path — evaluating a pickled-list createDataFrame costs
-    ~4x more per pass (every consumer pays a Python-worker round trip
-    per parallelize slice; guide §4 — keep driver data off the
-    row-pickle boundary). Values are identical."""
-    import pandas as pd
-
-    return spark.createDataFrame(
-        pd.DataFrame(rows, columns=columns), schema=schema
+def _centroids_df(spark: SparkSession, centroids: list) -> DataFrame:
+    """The coarse quantizer as bounded ``(list_id, centroid)`` rows."""
+    return small_df(
+        spark,
+        [(i, [float(x) for x in c]) for i, c in enumerate(centroids)],
+        "list_id long, centroid array<double>",
     )
 
 
@@ -85,6 +80,11 @@ def build_ivf_index(
         centroids = fit_ivf_centroids(
             df, vec_col=vec_col, n_lists=n_lists, seed=seed
         )
+    # the bounded model commits first: if it fails, the previous index
+    # version and its centroids stay in place together
+    table_commit(
+        _centroids_df(spark, centroids), f"{path}_centroids", mode="overwrite"
+    )
     assign1 = nearest_centroids_pd(centroids, 1)
     assigned = df.select(
         F.col(id_col),
@@ -103,30 +103,7 @@ def build_ivf_index(
         clustered = assigned.repartitionByRange(
             n_files, "list_id"
         ).sortWithinPartitions("list_id")
-        # the bounded centroids-model commit and the corpus codes
-        # commit target DIFFERENT tables — overlap them on a thread
-        # (guide §2.6); the model frame takes the Arrow path (a
-        # pickled-list createDataFrame costs ~4x more per evaluation)
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            cent_fut = pool.submit(
-                table_commit,
-                _model_df(
-                    spark,
-                    [
-                        (i, [float(x) for x in c])
-                        for i, c in enumerate(centroids)
-                    ],
-                    ["list_id", "centroid"],
-                    "list_id long, centroid array<double>",
-                ),
-                f"{path}_centroids",
-                mode="overwrite",
-            )
-            version = table_commit(clustered, path, mode="overwrite")
-            cent_fut.result()
-        return version
+        return table_commit(clustered, path, mode="overwrite")
     finally:
         assigned.unpersist()
 
@@ -325,45 +302,41 @@ def build_pq_index(
 
     spark = df.sparkSession
     payload: list = []
+    # both fits are a bounded sample collect plus driver numpy. The
+    # bounded model tables commit before the codes table, so a failed
+    # model commit leaves the previous codes with their own models
+    codebooks = fit_pq_codebooks(
+        df, vec_col=vec_col, m=m, k_codes=k_codes, seed=seed, sample=sample
+    )
     if n_lists:
-        # the PQ codebook fit (one bounded collect + driver numpy) and
-        # the IVF coarse-quantizer fit (seeded MLlib jobs) are
-        # INDEPENDENT — run them on two threads so the driver-side
-        # numpy time overlaps the cluster-side MLlib time (guide §2.6
-        # — overlap independent jobs). Each fit's inputs and seeds are
-        # exactly the serial path's, so both results are bit-identical.
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            cb_fut = pool.submit(
-                fit_pq_codebooks,
-                df,
-                vec_col=vec_col,
-                m=m,
-                k_codes=k_codes,
-                seed=seed,
-                sample=sample,
-            )
-            iv_fut = pool.submit(
-                fit_ivf_centroids,
-                df,
-                vec_col=vec_col,
-                n_lists=n_lists,
-                seed=seed,
-            )
-            codebooks = cb_fut.result()
-            centroids = iv_fut.result()
+        centroids = fit_ivf_centroids(
+            df, vec_col=vec_col, n_lists=n_lists, seed=seed
+        )
+        table_commit(
+            _centroids_df(spark, centroids),
+            f"{path}_centroids",
+            mode="overwrite",
+            collect_stats=False,  # bounded model rows — never pruned
+        )
         assign1 = nearest_centroids_pd(centroids, 1)
         df = df.withColumn(
             "list_id", F.element_at(assign1(F.col(vec_col)), 1)
         )
         payload = ["list_id"]
-    else:
-        centroids = None
-        codebooks = fit_pq_codebooks(
-            df, vec_col=vec_col, m=m, k_codes=k_codes, seed=seed,
-            sample=sample,
-        )
+    table_commit(
+        small_df(
+            spark,
+            [
+                (s, c, [float(x) for x in codebooks[s][c]])
+                for s in range(m)
+                for c in range(k_codes)
+            ],
+            "subspace int, code int, centroid array<double>",
+        ),
+        f"{path}_codebooks",
+        mode="overwrite",
+        collect_stats=False,  # bounded model rows — never pruned
+    )
     codes = pq_encode(df, codebooks, id_col, vec_col, payload_cols=payload)
     persisted = None
     if n_lists:
@@ -375,51 +348,8 @@ def build_pq_index(
         codes = codes.repartitionByRange(
             n_files, "list_id"
         ).sortWithinPartitions("list_id")
-    cb_rows = [
-        (s, c, [float(x) for x in codebooks[s][c]])
-        for s in range(m)
-        for c in range(k_codes)
-    ]
-
-    def _commit_models() -> None:
-        # bounded model tables (centroids + codebooks) — Arrow-path
-        # frames, committed on a thread so they overlap the corpus
-        # encode + codes commit (different tables; guide §2.6)
-        if centroids is not None:
-            table_commit(
-                _model_df(
-                    spark,
-                    [
-                        (i, [float(x) for x in c])
-                        for i, c in enumerate(centroids)
-                    ],
-                    ["list_id", "centroid"],
-                    "list_id long, centroid array<double>",
-                ),
-                f"{path}_centroids",
-                mode="overwrite",
-                collect_stats=False,  # bounded model rows — never pruned
-            )
-        table_commit(
-            _model_df(
-                spark,
-                cb_rows,
-                ["subspace", "code", "centroid"],
-                "subspace int, code int, centroid array<double>",
-            ),
-            f"{path}_codebooks",
-            mode="overwrite",
-            collect_stats=False,  # bounded model rows — never pruned
-        )
-
-    from concurrent.futures import ThreadPoolExecutor
-
     try:
-        with ThreadPoolExecutor(max_workers=1) as pool:
-            models_fut = pool.submit(_commit_models)
-            version = table_commit(codes, path, mode="overwrite")
-            models_fut.result()
-        return version
+        return table_commit(codes, path, mode="overwrite")
     finally:
         if persisted is not None:
             persisted.unpersist()

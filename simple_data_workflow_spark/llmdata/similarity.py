@@ -26,6 +26,7 @@ from pyspark.sql import functions as F
 from pyspark.sql.functions import pandas_udf
 from pyspark.sql.window import Window
 
+from simple_data_workflow_spark.blasctl import blas_threads
 from simple_data_workflow_spark.functions.vectors import (
     cosine,
     cosine_pd,
@@ -343,24 +344,33 @@ def quantize_embeddings(
     )
 
 
+def _sample_matrix(corpus: DataFrame, vec_col: str, sample: int) -> np.ndarray:
+    """The first ``sample`` vectors as a float64 ``sample × dim`` matrix:
+    one Arrow collect, the bounded training set of both driver-side
+    quantizer fits. On a local master the rows and their order are those
+    of ``limit(sample).collect()``, so a seeded refit is identical."""
+    pdf = (
+        corpus.select(F.col(vec_col).cast("array<double>").alias("v"))
+        .limit(sample)
+        .toPandas()
+    )
+    return np.asarray(pdf["v"].tolist(), dtype=np.float64)
+
+
 def fit_ivf_centroids(
     corpus: DataFrame,
     vec_col: str = "embedding",
     n_lists: int = 16,
     seed: int = 42,
 ) -> list[list[float]]:
-    """Train the IVF coarse quantizer (seeded MLlib KMeans on a bounded
-    sample) and return plain centroid lists. Index building is a one-time
-    cost amortized over queries — fit once, pass ``centroids`` into
-    ``ivf_topk`` for every search."""
-    from pyspark.ml.clustering import KMeans
-    from pyspark.ml.functions import array_to_vector
-
-    train = corpus.select(
-        array_to_vector(F.col(vec_col).cast("array<double>")).alias("features")
-    ).limit(10_000)
-    model = KMeans(k=n_lists, seed=seed, maxIter=5).fit(train)
-    return [list(map(float, c)) for c in model.clusterCenters()]
+    """Train the IVF coarse quantizer (seeded numpy Lloyd k-means on a
+    bounded 10k-row sample, fit on the driver) and return plain centroid
+    lists. Index building is a one-time cost amortized over queries —
+    fit once, pass ``centroids`` into ``ivf_topk`` for every search."""
+    X = _sample_matrix(corpus, vec_col, 10_000)
+    # single-threaded BLAS for the small GEMMs, as in fit_pq_codebooks
+    with blas_threads(1):
+        return _kmeans_np(X, n_lists, seed=seed).tolist()
 
 
 def ivf_topk(
@@ -378,10 +388,11 @@ def ivf_topk(
     each corpus vector assigned to its nearest centroid list, each query
     probes its ``n_probe`` nearest lists and exact-scores only those.
 
-    The quantizer trains on a sample via MLlib KMeans (seeded); the
-    centroid set is tiny and rides into the plan as literals. Compute is
-    ∝ corpus/n_lists · n_probe per query instead of the full corpus;
-    the shuffle key is the list id. Recall < 1 by construction.
+    The quantizer trains on a bounded sample on the driver
+    (``fit_ivf_centroids``, seeded); the centroid set is tiny and rides
+    into the plan as literals. Compute is ∝ corpus/n_lists · n_probe per
+    query instead of the full corpus; the shuffle key is the list id.
+    Recall < 1 by construction.
     """
     corpus = ensure_parallelism(corpus)
     if centroids is None:
@@ -419,11 +430,11 @@ def ivf_topk(
 
 
 def _kmeans_np(X: "np.ndarray", k: int, iters: int = 20, seed: int = 42):
-    """Seeded Lloyd k-means on a driver-side sample — the PQ codebook
-    trainer. Deterministic (fixed RNG, distinct-point init); empty
-    clusters keep their previous centroid. Sample sizes are bounded by
-    the caller (10k × sub_dim), so each fit is milliseconds of numpy —
-    no MLlib job per subspace."""
+    """Seeded Lloyd k-means on a driver-side sample — the trainer of both
+    quantizers (IVF coarse centroids and PQ subspace codebooks).
+    Deterministic (fixed RNG, distinct-point init); empty clusters keep
+    their previous centroid. Sample sizes are bounded by the caller
+    (10k rows), so each fit is milliseconds of numpy — no Spark job."""
     rng = np.random.default_rng(seed)
     k = min(k, len(X))
     idx = rng.choice(len(X), size=k, replace=False)
@@ -467,12 +478,7 @@ def fit_pq_codebooks(
     contract as ``fit_ivf_centroids``; the codebooks (m·k_codes·dim/m
     floats ≈ the full vector dim × k_codes) broadcast as plain lists.
     Returns ``codebooks[m][k_codes][dim//m]``."""
-    rows = (
-        corpus.select(F.col(vec_col).cast("array<double>").alias("v"))
-        .limit(sample)
-        .collect()
-    )
-    X = np.asarray([r["v"] for r in rows], dtype=np.float64)
+    X = _sample_matrix(corpus, vec_col, sample)
     X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
     if dim is None:
         dim = X.shape[1]
@@ -486,8 +492,6 @@ def fit_pq_codebooks(
     # fit; measured ~4× on the 16-subspace PQ shape)
     import os as _os
     from concurrent.futures import ThreadPoolExecutor
-
-    from simple_data_workflow_spark.blasctl import blas_threads
 
     def _fit(i: int) -> list:
         return _kmeans_np(X[:, i * sub : (i + 1) * sub], k_codes, seed=seed + i).tolist()

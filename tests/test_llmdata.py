@@ -1022,6 +1022,143 @@ def test_ivf_recall_curve_on_real_embeddings(spark):
     assert recalls[4] >= 0.6, recalls  # documented-default floor
 
 
+def _multi_file_corpus(spark, tmp_path, n=12_000, dim=8, files=4):
+    """A seeded float32 embedding table over several parquet files, so
+    a ``limit`` sample spans partitions and stops inside one."""
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    X = np.random.default_rng(7).standard_normal((n, dim)).astype(np.float32)
+    d = tmp_path / "multi_file_corpus"
+    d.mkdir()
+    per = n // files
+    for i in range(files):
+        sl = slice(i * per, (i + 1) * per)
+        pq.write_table(
+            pa.table({
+                "vec_id": np.arange(sl.start, sl.stop, dtype=np.int64),
+                "embedding": pa.array(list(X[sl]), type=pa.list_(pa.float32())),
+            }),
+            str(d / f"part-{i}.parquet"),
+        )
+    corpus = spark.read.parquet(str(d))
+    assert corpus.rdd.getNumPartitions() > 1
+    return corpus
+
+
+def _row_collected_sample(corpus, sample):
+    """The sample as a row-pickled ``limit(...).collect()`` returns it."""
+    rows = (
+        corpus.select(F.col("embedding").cast("array<double>").alias("v"))
+        .limit(sample)
+        .collect()
+    )
+    return np.asarray([r["v"] for r in rows], dtype=np.float64)
+
+
+def test_fit_ivf_centroids_is_seeded_driver_fit(spark, tmp_path):
+    """The IVF coarse quantizer is the seeded numpy Lloyd fit on the
+    first 10,000 rows: refits with one seed are identical, and the
+    result is ``_kmeans_np`` on the row-collected sample."""
+    from simple_data_workflow_spark.blasctl import blas_threads
+
+    corpus = _multi_file_corpus(spark, tmp_path)
+    got = similarity.fit_ivf_centroids(corpus, n_lists=16, seed=42)
+    assert similarity.fit_ivf_centroids(corpus, n_lists=16, seed=42) == got
+    assert len(got) == 16 and all(len(c) == 8 for c in got)
+    X = _row_collected_sample(corpus, 10_000)
+    assert X.shape == (10_000, 8)
+    with blas_threads(1):
+        want = similarity._kmeans_np(X, 16, seed=42).tolist()
+    assert got == want
+
+
+def test_fit_pq_codebooks_matches_row_collected_sample(spark, tmp_path):
+    """The Arrow sample collect keeps the PQ codebooks bit-identical to
+    the row-pickled collect they were trained on before: same rows,
+    same order, same per-subspace seeded fits."""
+    from simple_data_workflow_spark.blasctl import blas_threads
+
+    corpus = _multi_file_corpus(spark, tmp_path)
+    got = similarity.fit_pq_codebooks(corpus, m=4, k_codes=16, sample=5_000)
+    X = _row_collected_sample(corpus, 5_000)
+    X = X / np.maximum(np.linalg.norm(X, axis=1, keepdims=True), 1e-12)
+    with blas_threads(1):
+        want = [
+            similarity._kmeans_np(X[:, 2 * i : 2 * i + 2], 16, seed=42 + i).tolist()
+            for i in range(4)
+        ]
+    assert got == want
+
+
+@pytest.mark.parametrize("kind", ["ivf", "ivf_pq"])
+def test_index_rebuild_fails_closed_on_centroids_commit(
+    spark, tmp_path, monkeypatch, kind
+):
+    """A rebuild whose ``_centroids`` commit raises surfaces the error,
+    and the previous index version and its centroids still search
+    exactly as before: the model tables commit before the corpus/codes
+    table, so no new rows are ever paired with old centroids."""
+    from simple_data_workflow_spark.llmdata import ann_index
+    from simple_data_workflow_spark.sources.tablelog import (
+        table_history,
+        table_read,
+    )
+
+    corpus = _multi_file_corpus(spark, tmp_path, n=800, dim=16)
+    q = corpus.where("vec_id % 50 = 0")
+    t = str(tmp_path / kind)
+    if kind == "ivf":
+        def build(seed):
+            return ann_index.build_ivf_index(
+                corpus, t, n_lists=16, files_per_index=8, seed=seed
+            )
+
+        def search():
+            return ann_index.ivf_index_search(spark, t, q, k=5, n_probe=4)
+    else:
+        def build(seed):
+            return ann_index.build_pq_index(
+                corpus, t, m=8, k_codes=16, n_lists=8, files_per_index=4,
+                seed=seed,
+            )
+
+        def search():
+            return ann_index.pq_index_search(spark, t, q, k=5, n_probe=4)
+
+    def centroids():
+        return sorted(
+            (r["list_id"], list(r["centroid"]))
+            for r in table_read(spark, f"{t}_centroids").collect()
+        )
+
+    def results():
+        return {
+            (r["query_id"], r["neighbor_id"], r["rank"], r["cosine"])
+            for r in search().collect()
+        }
+
+    version = build(42)
+    cents, before = centroids(), results()
+    assert before
+
+    commit = ann_index.table_commit
+
+    def failing_commit(df, path, *args, **kwargs):
+        if path.endswith("_centroids"):
+            raise OSError("injected centroids commit failure")
+        return commit(df, path, *args, **kwargs)
+
+    monkeypatch.setattr(ann_index, "table_commit", failing_commit)
+    with pytest.raises(OSError, match="injected centroids commit failure"):
+        build(7)
+    monkeypatch.undo()
+
+    assert table_history(spark, t)[-1]["version"] == version
+    assert centroids() == cents
+    assert results() == before
+
+
 def test_bpe_encode_matches_per_word_segment(spark):
     """Distributed bpe_encode (distinct-word memoization + join-back)
     must equal naive per-document bpe_segment application, including
