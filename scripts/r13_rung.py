@@ -354,17 +354,15 @@ def part_d_manifest_decode(spark):
     OCF reader. A/B the same manifest file at 1k/4k/16k entries (the
     legacy path is reproduced inline; 64k python-only — the legacy
     path's projected wall is linear in RPCs)."""
-    from simple_data_workflow_spark.sources.iceberg_reader import (
-        _avro_records,
-        _jfs,
-    )
+    from simple_data_workflow_spark.sources.iceberg_reader import _avro_records
+    from simple_data_workflow_spark.sources.tablefs import hadoop_fs
     from simple_data_workflow_spark.sources.iceberg_writer import (
         _manifest_entry_schema_json,
         _write_avro,
     )
 
     def legacy_records(path):
-        jvm, _ = _jfs(spark, path)
+        jvm, _ = hadoop_fs(spark, path)
         fs_in = jvm.org.apache.avro.mapred.FsInput(
             jvm.org.apache.hadoop.fs.Path(path),
             spark._jsc.hadoopConfiguration(),

@@ -47,14 +47,13 @@ parquet scans with pushdown/pruning per group.
 from __future__ import annotations
 
 import json
-import os
 import urllib.parse
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import StructType
 
-from simple_data_workflow_spark.sources import localfs
+from simple_data_workflow_spark.sources import tablefs
 from simple_data_workflow_spark.smalldf import small_df
 
 
@@ -110,45 +109,11 @@ def _scan_spelling(p: str) -> str:
     )
 
 
-def _jfs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
-def _read_bytes(spark: SparkSession, path: str) -> bytes:
-    loc = localfs.local_root(path)
-    if loc is not None:
-        return localfs.read_bytes(loc)
-    jvm, fs = _jfs(spark, path)
-    stream = fs.open(jvm.org.apache.hadoop.fs.Path(path))
-    try:
-        return bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-
-
-def _list_log_names(spark: SparkSession, path: str) -> list[str] | None:
-    """Entry names of ``<path>/_delta_log``, or None when the dir is
-    absent — local fast path, Hadoop fallback for scheme'd roots."""
-    loc = localfs.local_root(path)
-    if loc is not None:
-        names = localfs.list_names(f"{loc}/_delta_log")
-        if not names and not os.path.isdir(f"{loc}/_delta_log"):
-            return None
-        return names
-    jvm, fs = _jfs(spark, path)
-    log_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_delta_log")
-    if not fs.exists(log_dir):
-        return None
-    return [st.getPath().getName() for st in fs.listStatus(log_dir)]
-
-
 def _list_log(spark: SparkSession, path: str):
     """(commit versions, {checkpoint version: [part files]}) in
     ``_delta_log`` — names follow the spec: ``<20-digit>.json``,
     ``<v>.checkpoint.parquet`` or ``<v>.checkpoint.<i>.<n>.parquet``."""
-    names = _list_log_names(spark, path)
+    names = tablefs.list_dir(spark, f"{path}/_delta_log")
     if names is None:
         raise FileNotFoundError(f"no _delta_log under {path}")
     commits: list[int] = []
@@ -651,7 +616,7 @@ def delta_read(
 
         for f, desc in dvs.items():
             dv_positions[f] = read_dv_positions(
-                lambda p: _read_bytes(spark, p), path, desc
+                lambda p: tablefs.read_file(spark, p), path, desc
             )
     if not part_cols:
         return fin(
@@ -688,7 +653,7 @@ def delta_version_at_timestamp(spark: SparkSession, path: str, ts_ms: int) -> in
     the ``commitInfo.timestamp`` when present, else the log file's
     modification time (Delta's own fallback). Raises if the table has
     no commit at or before the asked instant."""
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     commits, _cps = _list_log(spark, path)
     best = None
     for v in commits:
@@ -696,7 +661,7 @@ def delta_version_at_timestamp(spark: SparkSession, path: str, ts_ms: int) -> in
             f"{path}/_delta_log/{v:020d}.json"
         )
         t = int(fs.getFileStatus(p).getModificationTime())
-        raw = _read_bytes(spark, str(p.toUri().getPath())).decode("utf-8")
+        raw = tablefs.read_file(spark, str(p.toUri().getPath())).decode("utf-8")
         for line in raw.splitlines():
             if not line.strip():
                 continue
@@ -728,7 +693,7 @@ def delta_history(spark: SparkSession, path: str) -> DataFrame:
     commits, _cps = _list_log(spark, path)
     rows = []
     for v in commits:
-        raw = _read_bytes(
+        raw = tablefs.read_file(
             spark, f"{path}/_delta_log/{v:020d}.json"
         ).decode("utf-8")
         info = {}
@@ -843,7 +808,7 @@ def delta_table_changes(
     rem_groups: dict[int, list] = {}
     ver_ts: dict[int, int | None] = {}
     for v in range(int(starting_version), end + 1):
-        raw = _read_bytes(
+        raw = tablefs.read_file(
             spark, f"{path}/_delta_log/{v:020d}.json"
         ).decode("utf-8")
         acts = [json.loads(x) for x in raw.splitlines() if x.strip()]
@@ -906,7 +871,7 @@ def delta_table_changes(
                     )
 
                     dv_pos = read_dv_positions(
-                        lambda p: _read_bytes(spark, p), path, desc
+                        lambda p: tablefs.read_file(spark, p), path, desc
                     )
                 group.append((_full(rel), pv, dv_pos))
             rem_groups[v] = group

@@ -32,6 +32,8 @@ from collections.abc import Mapping
 import pyarrow as pa
 import pyarrow.compute as pc
 
+from simple_data_workflow_spark.sources import tablefs
+
 _KV = pa.map_(pa.string(), pa.string())
 _DV_FIELDS = (
     ("storageType", pa.string()),
@@ -272,7 +274,6 @@ def _checkpoint_state(spark, parts: list[str]):
     """Seed state from a checkpoint: ``(adds table, meta, proto,
     txns)``. Handles classic single/multipart parquet and the V2
     manifest (parquet or JSON) + ``_sidecars/`` layout."""
-    from simple_data_workflow_spark.sources.delta_reader import _read_bytes
 
     def _is_classic(name: str) -> bool:
         rest = name.split(".checkpoint.", 1)[1]
@@ -299,7 +300,7 @@ def _checkpoint_state(spark, parts: list[str]):
         if manifest.endswith(".json"):
             head_actions = [
                 json.loads(line)
-                for line in _read_bytes(spark, manifest)
+                for line in tablefs.read_file(spark, manifest)
                 .decode("utf-8")
                 .splitlines()
                 if line.strip()
@@ -579,10 +580,7 @@ def replay_snapshot(spark, path: str, version: int | None = None) -> DeltaSnapsh
     """Arrow-native snapshot resolution: seed from the newest
     checkpoint ≤ target (pyarrow read — no Spark job, no Row boxing),
     replay the JSON tail, resolve last-wins vectorized."""
-    from simple_data_workflow_spark.sources.delta_reader import (
-        _list_log,
-        _read_bytes,
-    )
+    from simple_data_workflow_spark.sources.delta_reader import _list_log
 
     commits, cps = _list_log(spark, path)
     if not commits and not cps:
@@ -604,7 +602,7 @@ def replay_snapshot(spark, path: str, version: int | None = None) -> DeltaSnapsh
     tail_removes: list[tuple[str, int]] = []
     seq = 0
     for v in [c for c in commits if start <= c <= target]:
-        raw = _read_bytes(
+        raw = tablefs.read_file(
             spark, f"{path}/_delta_log/{v:020d}.json"
         ).decode("utf-8")
         for line in raw.splitlines():

@@ -46,11 +46,10 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
-from simple_data_workflow_spark.sources import localfs
+from simple_data_workflow_spark.sources import tablefs
 
 from simple_data_workflow_spark.sources.delta_reader import (
     _list_log,
-    _read_bytes,
     _NULL_PARTITION,
 )
 
@@ -238,51 +237,12 @@ def _check_writer_allowed(
                 )
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
 def _publish_if_absent(spark, path: str, name: str, body: str) -> bool:
-    """Stage under a dot-name, publish to ``_delta_log/name`` if-absent
-    (POSIX ``link(2)`` EEXIST atomicity on local FS — the same
-    primitive ``tablelog._write_json_if_absent`` documents; HDFS
-    rename refuses existing destinations so the fallback is safe
-    there too)."""
-    loc = localfs.local_root(path)
-    if loc is not None:
-        return localfs.write_if_absent(
-            f"{loc}/_delta_log/{name}", body.encode("utf-8")
-        )
-    jvm, fs = _fs(spark, path)
-    log = f"{path}/_delta_log"
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(log))
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{log}/.tmp-{uuid.uuid4().hex}")
-    out = fs.create(tmp, False)
-    try:
-        out.write(body.encode("utf-8"))
-    finally:
-        out.close()
-    target = jvm.org.apache.hadoop.fs.Path(f"{log}/{name}")
-    scheme = target.toUri().getScheme()
-    if scheme in (None, "file"):
-        t_nio = jvm.java.io.File(target.toUri().getPath()).toPath()
-        s_nio = jvm.java.io.File(tmp.toUri().getPath()).toPath()
-        try:
-            jvm.java.nio.file.Files.createLink(t_nio, s_nio)
-            won = True
-        except Exception:
-            won = False
-        fs.delete(tmp, False)
-        return won
-    if fs.exists(target):
-        fs.delete(tmp, False)
-        return False
-    won = fs.rename(tmp, target)
-    if not won:
-        fs.delete(tmp, False)
-    return won
+    """Publish ``body`` as ``_delta_log/name`` if-absent
+    (``tablefs.publish_if_absent``); returns whether this writer won."""
+    return tablefs.publish_if_absent(
+        spark, f"{path}/_delta_log", name, body.encode("utf-8")
+    )
 
 
 def _replay_full(spark, path: str, version: int | None = None):
@@ -407,61 +367,20 @@ def _stage_data_files(
     Hive-style dir names Spark itself produced, paths percent-encoded
     per spec, stats from the footers."""
     spark = df.sparkSession
-    loc = localfs.local_root(path)
     staging = f"{path}/.staging-{uuid.uuid4().hex}"
     writer = df.write.mode("overwrite")
     if partition_by:
         writer = writer.partitionBy(*partition_by)
     writer.parquet(staging)
-
-    if loc is not None:
-        staging_loc = f"{loc}/.staging-{staging.rsplit('.staging-', 1)[1]}"
-
-        def walk(p):
-            for entry in sorted(os.scandir(p), key=lambda e: e.path):
-                if entry.is_dir():
-                    yield from walk(entry.path)
-                else:
-                    yield entry.path, entry.stat().st_size
-
-        def move(full, dest):
-            os.makedirs(dest.rsplit("/", 1)[0], exist_ok=True)
-            os.rename(full, dest)
-
-        entries = list(walk(staging_loc))
-        staging_uri, table_root = staging_loc, loc
-        cleanup = lambda: localfs.delete(staging_loc, recursive=True)  # noqa: E731
-    else:
-        jvm, fs = _fs(spark, path)
-
-        def jwalk(p):
-            for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(p)):
-                if st.isDirectory():
-                    yield from jwalk(str(st.getPath().toUri().getPath()))
-                else:
-                    yield str(st.getPath().toUri().getPath()), int(st.getLen())
-
-        def move(full, dest):
-            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(dest.rsplit("/", 1)[0]))
-            if not fs.rename(
-                jvm.org.apache.hadoop.fs.Path(full),
-                jvm.org.apache.hadoop.fs.Path(dest),
-            ):
-                raise IOError(f"failed to move staged file into table: {dest}")
-
-        staging_uri = jvm.org.apache.hadoop.fs.Path(staging).toUri().getPath()
-        entries = list(jwalk(staging))
-        table_root = path
-        cleanup = lambda: fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)  # noqa: E731
-
+    # names read off the disk join decoded roots (see tablefs.staged_files)
+    table_root = tablefs.local_root(path) or path
+    src = tablefs.local_root(staging) or staging
     part_set = set(partition_by)
     adds = []
     now = int(time.time() * 1000)
-    for full, flen in entries:
-        name = full.rsplit("/", 1)[1]
-        if not name.endswith(".parquet"):
+    for rel, flen, _ in tablefs.staged_files(spark, staging):
+        if not rel.endswith(".parquet"):
             continue
-        rel = full[len(staging_uri) + 1 :]
         segs = rel.split("/")
         pv: dict[str, str | None] = {}
         for seg in segs[:-1]:
@@ -471,7 +390,7 @@ def _stage_data_files(
             k = urllib.parse.unquote(k)
             pv[k] = None if v == _NULL_PARTITION else urllib.parse.unquote(v)
         dest = f"{table_root}/{rel}"
-        move(full, dest)
+        tablefs.move(spark, f"{src}/{rel}", dest)
         stats = _file_stats(dest, part_set)
         add = {
             "path": "/".join(urllib.parse.quote(s, safe="=") for s in segs),
@@ -483,7 +402,7 @@ def _stage_data_files(
         if stats:
             add["stats"] = stats
         adds.append(add)
-    cleanup()
+    tablefs.remove(spark, staging, recursive=True)
     return adds
 
 
@@ -735,7 +654,7 @@ def delta_write(
             # tree but never referenced — clean them up before raising,
             # or retried overwrites accumulate orphans a vacuum of this
             # log can't see
-            jvm, fs = _fs(spark, path)
+            jvm, fs = tablefs.hadoop_fs(spark, path)
             for a in adds:
                 dec = urllib.parse.unquote(a["path"])
                 fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{dec}"), False)
@@ -1069,7 +988,7 @@ def delta_checkpoint(
         }
         return pa.table(cols, schema=pa.schema([fields[nm] for nm in names]))
 
-    jvm, _ = _fs(spark, path)
+    jvm, _ = tablefs.hadoop_fs(spark, path)
     local = jvm.org.apache.hadoop.fs.Path(path).toUri().getPath()
     now = int(time.time() * 1000)
     if format == "classic":
@@ -1160,7 +1079,6 @@ def _snapshot_view(
         _is_mapped,
         _physical_name,
         _physicalize,
-        _read_bytes,
         _scan_spelling,
         _with_field_ids,
     )
@@ -1228,7 +1146,7 @@ def _snapshot_view(
 
         for f, desc in dvs.items():
             dv_positions[f] = read_dv_positions(
-                lambda p: _read_bytes(spark, p), path, desc
+                lambda p: tablefs.read_file(spark, p), path, desc
             )
 
     lead = ["__file"] + ([row_col] if row_col else [])
@@ -1971,7 +1889,7 @@ def delta_clone(
     except FileNotFoundError:
         pass
 
-    jvm, _fs_ = _fs(spark, src_path)
+    jvm, _fs_ = tablefs.hadoop_fs(spark, src_path)
     src_local = jvm.org.apache.hadoop.fs.Path(src_path).toUri().getPath()
     now = int(time.time() * 1000)
     lines = [
@@ -2197,7 +2115,7 @@ def _dml_rewrite(
             return version
         # lost the race: the snapshot moved under us — the staged files
         # are orphans (never referenced); re-resolve and redo the DML
-        jvm, fs = _fs(spark, path)
+        jvm, fs = tablefs.hadoop_fs(spark, path)
         for a in staged:
             dec = urllib.parse.unquote(a["path"])
             fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{dec}"), False)
@@ -2335,7 +2253,7 @@ def _dv_dml(
                     spark, path, view, cdf, operation
                 )
 
-        jvm, fs = _fs(spark, path)
+        jvm, fs = tablefs.hadoop_fs(spark, path)
         from pyspark.sql import functions as F
 
         sidecars: list[str] = []
@@ -3285,7 +3203,6 @@ def delta_optimize(
 
     from simple_data_workflow_spark.sources.delta_reader import (
         _check_protocol,
-        _read_bytes,
     )
     from simple_data_workflow_spark.sources.delta_state import (
         replay_snapshot,
@@ -3358,7 +3275,7 @@ def delta_optimize(
             for f, desc in dvs.items():
                 if f in set(compact):
                     dv_positions[f] = read_dv_positions(
-                        lambda p: _read_bytes(spark, p), path, desc
+                        lambda p: tablefs.read_file(spark, p), path, desc
                     )
         from simple_data_workflow_spark.sources.delta_reader import (
             _dv_masked_scan,
@@ -3513,7 +3430,7 @@ def delta_optimize(
             spark, path, f"{version:020d}.json", "\n".join(lines) + "\n"
         ):
             return version
-        jvm, fs = _fs(spark, path)
+        jvm, fs = tablefs.hadoop_fs(spark, path)
         for a in staged_all:
             dec = urllib.parse.unquote(a["path"])
             fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{dec}"), False)
@@ -3532,48 +3449,57 @@ def delta_vacuum(
     like Delta. Returns the deleted paths. Log JSON is NOT touched
     (checkpoint-based log cleanup is `delta_checkpoint`'s domain)."""
     from simple_data_workflow_spark.sources.delta_reader import (
+        _strip_scheme,
         delta_snapshot_files,
     )
     from simple_data_workflow_spark.sources.delta_dv import dv_uuid_path
 
+    # Live and walked files compare as scheme-less absolute paths: names
+    # under ``path`` join its resolved root, absolute adds (plain or
+    # ``file:``) keep their literal names. Relative, ``file:`` and
+    # absolute spellings of one file thus meet.
+    loc = tablefs.local_root(path)
+    if loc is not None:
+        base = os.path.abspath(loc)
+    else:
+        jvm, fs = tablefs.hadoop_fs(spark, path)
+        qualified = fs.makeQualified(jvm.org.apache.hadoop.fs.Path(path))
+        base = str(qualified.toUri().getPath())
+    prefix = f"{path}/"
+
+    def key(p):
+        if p.startswith(prefix):
+            return f"{base}/{p[len(prefix):]}"
+        p = _strip_scheme(p)
+        return os.path.abspath(p) if loc is not None else p
+
     files, dvs, _schema, _pc = delta_snapshot_files(spark, path)
-    live = set()
-    jvm, fs = _fs(spark, path)
-    root_local = jvm.org.apache.hadoop.fs.Path(path).toUri().getPath()
-    for f in files:
-        live.add(f if f.startswith("/") else f"{root_local}/{f}")
+    live = {key(f) for f in files}
     for desc in dvs.values():
         st = desc.get("storageType")
         if st == "u":
-            live.add(dv_uuid_path(root_local, desc["pathOrInlineDv"]))
+            live.add(key(dv_uuid_path(path, desc["pathOrInlineDv"])))
         elif st == "p":
-            live.add(desc["pathOrInlineDv"])
+            live.add(key(desc["pathOrInlineDv"]))
     horizon = int(time.time() * 1000) - int(retention_hours * 3600 * 1000)
 
-    def walk(p):
-        for st_ in fs.listStatus(jvm.org.apache.hadoop.fs.Path(p)):
-            name = st_.getPath().getName()
-            if st_.isDirectory():
-                if name == "_delta_log" or name.startswith(".staging"):
-                    continue
-                yield from walk(str(st_.getPath().toUri().getPath()))
-            else:
-                yield st_
+    def skip(d):
+        return d == "_delta_log" or d.startswith(".staging")
 
+    root = loc if loc is not None else path
     deleted = []
-    for st_ in walk(path):
-        full = str(st_.getPath().toUri().getPath())
-        name = full.rsplit("/", 1)[1]
+    for rel, _, mtime in tablefs.staged_files(spark, path, skip=skip):
+        name = rel.rsplit("/", 1)[-1]
         if name.startswith(".") or name.startswith("_"):
             continue
         if not (name.endswith(".parquet") or name.endswith(".bin")):
             continue
-        if full in live:
+        if f"{base}/{rel}" in live:
             continue
-        if int(st_.getModificationTime()) >= horizon:
+        if mtime >= horizon:
             continue  # too young: a concurrent writer may reference it
-        fs.delete(st_.getPath(), False)
-        deleted.append(full)
+        if tablefs.remove(spark, f"{root}/{rel}"):
+            deleted.append(f"{path}/{rel}")
     return sorted(deleted)
 
 
@@ -3592,7 +3518,7 @@ def delta_cleanup_log(
         return []
     cp_max = max(cps)
     horizon = int(time.time() * 1000) - int(retention_hours * 3600 * 1000)
-    jvm, fs = _fs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     deleted = []
     for v in sorted(commits):
         if v > cp_max:
@@ -3626,7 +3552,7 @@ def delta_restore(
     )
     if meta_tgt is None:
         raise ValueError(f"no metaData at or before version {version}")
-    jvm, fs = _fs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     for rel, a in adds_tgt.items():
         dec = urllib.parse.unquote(rel)
         full = dec if "://" in dec or dec.startswith("/") else f"{path}/{dec}"

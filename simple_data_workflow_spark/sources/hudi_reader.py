@@ -49,17 +49,11 @@ files store ALL columns, including partition columns).
 from __future__ import annotations
 
 import json
-import os
 import re
 
 from pyspark.sql import DataFrame, SparkSession
 
-from simple_data_workflow_spark.sources import localfs
-
-from simple_data_workflow_spark.sources.delta_reader import (
-    _jfs,
-    _read_bytes,
-)
+from simple_data_workflow_spark.sources import tablefs
 
 
 class HudiFeatureUnsupported(NotImplementedError):
@@ -76,21 +70,10 @@ _BASE_FILE_RE = re.compile(
 def load_table_properties(spark: SparkSession, path: str) -> dict:
     """Parse ``.hoodie/hoodie.properties`` (java.util.Properties
     format: ``key=value`` lines, ``#`` comments)."""
-    loc = localfs.local_root(path)
-    if loc is not None:
-        if not os.path.exists(f"{loc}/.hoodie/hoodie.properties"):
-            raise FileNotFoundError(
-                f"no .hoodie/hoodie.properties under {path}"
-            )
-    else:
-        jvm, fs = _jfs(spark, path)
-        p = jvm.org.apache.hadoop.fs.Path(f"{path}/.hoodie/hoodie.properties")
-        if not fs.exists(p):
-            raise FileNotFoundError(
-                f"no .hoodie/hoodie.properties under {path}"
-            )
+    if not tablefs.exists(spark, f"{path}/.hoodie/hoodie.properties"):
+        raise FileNotFoundError(f"no .hoodie/hoodie.properties under {path}")
     props: dict[str, str] = {}
-    raw = _read_bytes(spark, f"{path}/.hoodie/hoodie.properties").decode(
+    raw = tablefs.read_file(spark, f"{path}/.hoodie/hoodie.properties").decode(
         "utf-8"
     )
     for line in raw.splitlines():
@@ -113,19 +96,14 @@ _COMPLETED_RE = re.compile(
 )
 
 
-def _timeline_dirs(spark: SparkSession, path: str) -> list[str]:
-    loc = localfs.local_root(path)
-    if loc is not None:
-        dirs = [f"{path}/.hoodie"]
-        if os.path.isdir(f"{loc}/.hoodie/timeline"):
-            dirs.append(f"{path}/.hoodie/timeline")
-        return dirs
-    jvm, fs = _jfs(spark, path)
-    dirs = [f"{path}/.hoodie"]
-    tl = jvm.org.apache.hadoop.fs.Path(f"{path}/.hoodie/timeline")
-    if fs.exists(tl):
-        dirs.append(f"{path}/.hoodie/timeline")
-    return dirs
+def _timeline_names(spark: SparkSession, path: str) -> list[str]:
+    """Entry names of ``.hoodie/`` and, when present, the 1.x layout's
+    ``.hoodie/timeline/``."""
+    return [
+        name
+        for d in (f"{path}/.hoodie", f"{path}/.hoodie/timeline")
+        for name in tablefs.list_dir(spark, d) or []
+    ]
 
 
 def _timeline(spark: SparkSession, path: str):
@@ -138,26 +116,14 @@ def _timeline(spark: SparkSession, path: str):
     reference it). ``deltacommit`` (merge-on-read writes) counts as a
     commit: its base files (inserts) and log blocks are live once the
     instant completes."""
-    loc = localfs.local_root(path)
     commits: set[str] = set()
     replaces: set[str] = set()
-    if loc is None:
-        jvm, fs = _jfs(spark, path)
-    for d in _timeline_dirs(spark, path):
-        if loc is not None:
-            rel = d[len(path) :]
-            names = localfs.list_names(f"{loc}{rel}")
-        else:
-            names = [
-                st.getPath().getName()
-                for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(d))
-            ]
-        for name in names:
-            m = _COMPLETED_RE.match(name)
-            if m:
-                (replaces if m.group(3) == "replacecommit" else commits).add(
-                    m.group(1)
-                )
+    for name in _timeline_names(spark, path):
+        m = _COMPLETED_RE.match(name)
+        if m:
+            (replaces if m.group(3) == "replacecommit" else commits).add(
+                m.group(1)
+            )
     return commits, replaces
 
 
@@ -167,29 +133,13 @@ def _instant_file(
     """Full path of a completed instant's metadata file in either
     timeline layout (classic bare name, or 1.x completion-suffixed
     under ``.hoodie/timeline/``)."""
-    loc = localfs.local_root(path)
     classic = f"{path}/.hoodie/{instant}.{action}"
-    if loc is not None:
-        if os.path.exists(f"{loc}/.hoodie/{instant}.{action}"):
-            return classic
-        for name in localfs.list_names(f"{loc}/.hoodie/timeline"):
-            m = _COMPLETED_RE.match(name)
-            if m and m.group(1) == instant and m.group(3) == action:
-                return f"{path}/.hoodie/timeline/{name}"
-        raise FileNotFoundError(
-            f"no completed {action} metadata for instant {instant} in "
-            f"either timeline layout under {path}/.hoodie"
-        )
-    jvm, fs = _jfs(spark, path)
-    if fs.exists(jvm.org.apache.hadoop.fs.Path(classic)):
+    if tablefs.exists(spark, classic):
         return classic
-    tl = jvm.org.apache.hadoop.fs.Path(f"{path}/.hoodie/timeline")
-    if fs.exists(tl):
-        for st in fs.listStatus(tl):
-            name = st.getPath().getName()
-            m = _COMPLETED_RE.match(name)
-            if m and m.group(1) == instant and m.group(3) == action:
-                return f"{path}/.hoodie/timeline/{name}"
+    for name in tablefs.list_dir(spark, f"{path}/.hoodie/timeline") or []:
+        m = _COMPLETED_RE.match(name)
+        if m and m.group(1) == instant and m.group(3) == action:
+            return f"{path}/.hoodie/timeline/{name}"
     raise FileNotFoundError(
         f"no completed {action} metadata for instant {instant} in either "
         f"timeline layout under {path}/.hoodie"
@@ -201,7 +151,7 @@ def _replaced_file_ids(
 ) -> dict[str, set[str]]:
     """``partition relpath -> replaced fileIds`` from one completed
     replacecommit's JSON metadata (HoodieReplaceCommitMetadata)."""
-    raw = _read_bytes(
+    raw = tablefs.read_file(
         spark, _instant_file(spark, path, instant, "replacecommit")
     ).decode("utf-8")
     meta = json.loads(raw) if raw.strip() else {}
@@ -215,6 +165,16 @@ def _replaced_file_ids(
 _LOG_FILE_RE = re.compile(
     r"^\.(?P<file_id>.+)_(?P<base_instant>\d+)\.log\.(?P<version>\d+)_(?P<token>.+)$"
 )
+
+
+def _root_local(spark: SparkSession, path: str) -> str:
+    """Plain-local path of the table root — ``os`` for scheme-less
+    roots, one py4j round trip otherwise."""
+    loc = tablefs.local_root(path)
+    if loc is not None:
+        return loc
+    jvm, _ = tablefs.hadoop_fs(spark, path)
+    return jvm.org.apache.hadoop.fs.Path(path).toUri().getPath()
 
 
 def _resolve_groups(
@@ -235,41 +195,16 @@ def _resolve_groups(
     if not completed:
         raise ValueError(f"no completed commits in the Hudi timeline at {path}")
 
-    loc = localfs.local_root(path)
-    if loc is not None:
-        root = loc
-
-        def walk(p):
-            for entry in sorted(os.scandir(p), key=lambda e: e.path):
-                if entry.is_dir():
-                    if entry.name == ".hoodie":
-                        continue
-                    yield from walk(entry.path)
-                else:
-                    yield entry.path
-
-    else:
-        jvm, fs = _jfs(spark, path)
-        root = jvm.org.apache.hadoop.fs.Path(path).toUri().getPath()
-
-        def walk(p):
-            for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(p)):
-                name = st.getPath().getName()
-                if st.isDirectory():
-                    if name == ".hoodie":
-                        continue
-                    yield from walk(str(st.getPath().toUri().getPath()))
-                else:
-                    yield str(st.getPath().toUri().getPath())
+    root = _root_local(spark, path)
+    staged = tablefs.staged_files(spark, path, skip=lambda d: d == ".hoodie")
 
     # (partition relpath, fileId) -> (instant, full path): latest valid
     # slice per file group
     groups: dict[tuple[str, str], tuple[str, str]] = {}
     log_candidates: list[tuple[str, str, str, int, str]] = []
-    for full in walk(path):
-        name = full.rsplit("/", 1)[1]
-        rel_dir = full[len(root) + 1 :].rsplit("/", 1)
-        part = rel_dir[0] if len(rel_dir) == 2 else ""
+    for rel, _, _ in staged:
+        part, _, name = rel.rpartition("/")
+        full = f"{root}/{rel}"
         m = _BASE_FILE_RE.match(name)
         if m:
             if m.group("instant") not in completed:
@@ -845,20 +780,15 @@ def hudi_timeline_table(spark: SparkSession, path: str) -> DataFrame:
     the ``hudi_table_changes``/timeline view's shape. Pending instants
     surface too (state = requested/inflight), so operators can see
     in-flight writes without being able to read them."""
-    jvm, fs = _jfs(spark, path)
     rows = []
-    for d in _timeline_dirs(spark, path):
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(d)):
-            name = st.getPath().getName()
-            m = re.match(
-                r"^(\d+)(?:_\d+)?\.(commit|deltacommit|replacecommit|clean"
-                r"|rollback)(?:\.(requested|inflight))?$",
-                name,
-            )
-            if m:
-                rows.append(
-                    (m.group(1), m.group(2), m.group(3) or "completed")
-                )
+    for name in _timeline_names(spark, path):
+        m = re.match(
+            r"^(\d+)(?:_\d+)?\.(commit|deltacommit|replacecommit|clean"
+            r"|rollback)(?:\.(requested|inflight))?$",
+            name,
+        )
+        if m:
+            rows.append((m.group(1), m.group(2), m.group(3) or "completed"))
     from simple_data_workflow_spark.smalldf import small_df
 
     return small_df(

@@ -39,9 +39,9 @@ import uuid
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from simple_data_workflow_spark.sources import localfs
-from simple_data_workflow_spark.sources.delta_reader import _jfs
+from simple_data_workflow_spark.sources import tablefs
 from simple_data_workflow_spark.sources.hudi_reader import (
+    _root_local,
     hudi_snapshot_files,
     load_table_properties,
 )
@@ -49,16 +49,6 @@ from simple_data_workflow_spark.sources.hudi_reader import (
 
 class HudiConcurrentWrite(RuntimeError):
     """Another writer committed the instant this write targeted."""
-
-
-def _root_local(spark: SparkSession, path: str) -> str:
-    """Plain-local path of the table root — ``os`` for scheme-less
-    roots, one py4j round trip otherwise."""
-    loc = localfs.local_root(path)
-    if loc is not None:
-        return loc
-    jvm, _fs = _jfs(spark, path)
-    return jvm.org.apache.hadoop.fs.Path(path).toUri().getPath()
 
 
 _META_COLS = [
@@ -81,17 +71,7 @@ def _next_instant(spark: SparkSession, path: str) -> str:
     collisions."""
     import re
 
-    loc = localfs.local_root(path)
-    if loc is not None:
-        names = localfs.list_names(f"{loc}/.hoodie")
-    else:
-        jvm, fs = _jfs(spark, path)
-        hd = jvm.org.apache.hadoop.fs.Path(f"{path}/.hoodie")
-        names = (
-            [st.getPath().getName() for st in fs.listStatus(hd)]
-            if fs.exists(hd)
-            else []
-        )
+    names = tablefs.list_dir(spark, f"{path}/.hoodie") or []
     existing = set()
     for n in names:
         m = re.match(r"^(\d+)\.", n)
@@ -110,39 +90,9 @@ def _next_instant(spark: SparkSession, path: str) -> str:
 def _publish_instant_if_absent(
     spark: SparkSession, path: str, name: str, body: str
 ) -> bool:
-    loc = localfs.local_root(path)
-    if loc is not None:
-        return localfs.write_if_absent(
-            f"{loc}/.hoodie/{name}", body.encode("utf-8")
-        )
-    jvm, fs = _jfs(spark, path)
-    hd = f"{path}/.hoodie"
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(hd))
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{hd}/.tmp-{uuid.uuid4().hex}")
-    out = fs.create(tmp, False)
-    try:
-        out.write(body.encode("utf-8"))
-    finally:
-        out.close()
-    target = jvm.org.apache.hadoop.fs.Path(f"{hd}/{name}")
-    scheme = target.toUri().getScheme()
-    if scheme in (None, "file"):
-        t_nio = jvm.java.io.File(target.toUri().getPath()).toPath()
-        s_nio = jvm.java.io.File(tmp.toUri().getPath()).toPath()
-        try:
-            jvm.java.nio.file.Files.createLink(t_nio, s_nio)
-            won = True
-        except Exception:
-            won = False
-        fs.delete(tmp, False)
-        return won
-    if fs.exists(target):
-        fs.delete(tmp, False)
-        return False
-    won = fs.rename(tmp, target)
-    if not won:
-        fs.delete(tmp, False)
-    return won
+    return tablefs.publish_if_absent(
+        spark, f"{path}/.hoodie", name, body.encode("utf-8")
+    )
 
 
 def hudi_write(
@@ -279,45 +229,16 @@ def _insert_batch(
         writer = writer.partitionBy(*shadows)
     writer.parquet(staging)
 
-    # staged-file moves: scheme-less roots go through ``os`` directly
-    # (the walk + per-file rename/mkdirs/marker loop is otherwise 4-6
-    # py4j round trips per staged file — pure driver serial time, the
-    # same local-FS fast path the timeline metadata ops already take);
-    # scheme'd roots keep the Hadoop route byte-for-byte
-    loc = localfs.local_root(path)
-    if loc is not None:
-        import os as _os
-
-        staging_local = localfs.local_root(staging)
-
-        def walk(p):
-            for entry in sorted(_os.scandir(p), key=lambda e: e.path):
-                if entry.is_dir():
-                    yield from walk(entry.path)
-                else:
-                    yield entry.path, entry.stat().st_size
-
-        staged = list(walk(staging_local))
-    else:
-        jvm, fs = _jfs(spark, path)
-        staging_local = jvm.org.apache.hadoop.fs.Path(staging).toUri().getPath()
-
-        def walk(p):
-            for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(p)):
-                if st.isDirectory():
-                    yield from walk(str(st.getPath().toUri().getPath()))
-                else:
-                    yield str(st.getPath().toUri().getPath()), int(st.getLen())
-
-        staged = list(walk(staging))
+    # names read off the disk join decoded roots (see tablefs.staged_files)
+    table_root = tablefs.local_root(path) or path
+    src = tablefs.local_root(staging) or staging
 
     write_stats: dict[str, list[dict]] = {}
+    marked: set[str] = set()
     seq = 0
-    for full, fsize in staged:
-        name = full.rsplit("/", 1)[1]
-        if not name.endswith(".parquet"):
+    for rel, fsize, _ in tablefs.staged_files(spark, staging):
+        if not rel.endswith(".parquet"):
             continue
-        rel = full[len(staging_local) + 1 :]
         segs = rel.split("/")
         clean = []
         for seg in segs[:-1]:
@@ -334,35 +255,13 @@ def _insert_batch(
             f"commitTime={instant}\n"
             f"partitionDepth={len(clean)}\n"
         ).encode()
-        if loc is not None:
-            dest_dir = f"{loc}/{part}" if part else loc
-            import os as _os
-
-            _os.makedirs(dest_dir, exist_ok=True)
-            if not localfs.rename(full, f"{dest_dir}/{new_name}"):
-                raise IOError(f"failed to move staged file into table: {rel}")
-            pm = f"{dest_dir}/.hoodie_partition_metadata"
-            if not _os.path.exists(pm):
-                localfs.write_if_absent(pm, pm_body)
-        else:
-            dest_dir = f"{path}/{part}" if part else path
-            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(dest_dir))
-            dest = f"{dest_dir}/{new_name}"
-            if not fs.rename(
-                jvm.org.apache.hadoop.fs.Path(full),
-                jvm.org.apache.hadoop.fs.Path(dest),
-            ):
-                raise IOError(f"failed to move staged file into table: {rel}")
-            # per-partition marker the Hudi reader stack expects
-            pm = jvm.org.apache.hadoop.fs.Path(
-                f"{dest_dir}/.hoodie_partition_metadata"
+        dest_dir = f"{table_root}/{part}" if part else table_root
+        tablefs.move(spark, f"{src}/{rel}", f"{dest_dir}/{new_name}")
+        if dest_dir not in marked:  # per-partition marker Hudi readers expect
+            tablefs.publish_if_absent(
+                spark, dest_dir, ".hoodie_partition_metadata", pm_body
             )
-            if not fs.exists(pm):
-                out = fs.create(pm, False)
-                try:
-                    out.write(pm_body)
-                finally:
-                    out.close()
+            marked.add(dest_dir)
         write_stats.setdefault(part, []).append(
             {
                 "fileId": fid,
@@ -370,10 +269,7 @@ def _insert_batch(
                 "fileSizeInBytes": fsize,
             }
         )
-    if loc is not None:
-        localfs.delete(staging_local, recursive=True)
-    else:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    tablefs.remove(spark, staging, recursive=True)
 
     if not exists:
         props_body = (
@@ -384,22 +280,9 @@ def _insert_batch(
             "hoodie.table.recordkey.fields=" + ",".join(keys) + "\n"
             "hoodie.table.partition.fields=" + ",".join(partition_by) + "\n"
         )
-        if loc is not None:
-            localfs.write_bytes(
-                f"{loc}/.hoodie/hoodie.properties", props_body.encode()
-            )
-        else:
-            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{path}/.hoodie"))
-            out = fs.create(
-                jvm.org.apache.hadoop.fs.Path(
-                    f"{path}/.hoodie/hoodie.properties"
-                ),
-                True,
-            )
-            try:
-                out.write(props_body.encode())
-            finally:
-                out.close()
+        tablefs.write_file(
+            spark, f"{path}/.hoodie/hoodie.properties", props_body.encode()
+        )
 
     meta = {
         "partitionToWriteStats": write_stats,
@@ -1128,33 +1011,24 @@ def hudi_clean(
     groups, logs, _c, _r = _resolve_groups(spark, path)
     # the slice a reader at the horizon would resolve per group: the
     # newest slice with instant <= horizon — everything older reaps
-    jvm, fs = _jfs(spark, path)
-    root_local = jvm.org.apache.hadoop.fs.Path(path).toUri().getPath()
     keep_floor: dict[tuple[str, str], str] = {}
     all_slices: dict[tuple[str, str], list[tuple[str, str]]] = {}
     base_re = _re.compile(
         r"^(?P<fid>.+?)_(?P<token>[^_]+)_(?P<instant>\d+)\.parquet$"
     )
-
-    def walk(p):
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(p)):
-            name = st.getPath().getName()
-            if st.isDirectory():
-                if name == ".hoodie":
-                    continue
-                yield from walk(str(st.getPath().toUri().getPath()))
-            else:
-                yield str(st.getPath().toUri().getPath())
-
-    for full in walk(path):
-        name = full.rsplit("/", 1)[-1]
+    files = [
+        rel
+        for rel, _, _ in tablefs.staged_files(
+            spark, path, skip=lambda d: d == ".hoodie"
+        )
+    ]
+    for rel in files:
+        part, _, name = rel.rpartition("/")
         m = base_re.match(name)
         if not m or m.group("instant") not in (commits | replaces):
             continue
-        rel_dir = full[len(root_local) + 1 :].rsplit("/", 1)
-        part = rel_dir[0] if len(rel_dir) == 2 else ""
         key = (part, m.group("fid"))
-        all_slices.setdefault(key, []).append((m.group("instant"), full))
+        all_slices.setdefault(key, []).append((m.group("instant"), rel))
     for key, slices in all_slices.items():
         slices.sort()
         at_horizon = [t for t, _f in slices if t <= horizon]
@@ -1170,21 +1044,17 @@ def hudi_clean(
     dead_bases: dict[tuple[str, str], set[str]] = {}
     for key, slices in all_slices.items():
         floor = keep_floor[key]
-        for t, full in slices:
+        for t, rel in slices:
             if t < floor:
-                fs.delete(jvm.org.apache.hadoop.fs.Path(full), False)
-                deleted.append(full)
+                deleted.append(rel)
                 dead_bases.setdefault(key, set()).add(t)
     # logs attached to reaped base slices reap with them
-    for full in walk(path):
-        name = full.rsplit("/", 1)[-1]
+    for rel in files:
+        part, _, name = rel.rpartition("/")
         m = log_re.match(name)
-        if not m:
-            continue
-        rel_dir = full[len(root_local) + 1 :].rsplit("/", 1)
-        part = rel_dir[0] if len(rel_dir) == 2 else ""
-        key = (part, m.group("fid"))
-        if m.group("binstant") in dead_bases.get(key, set()):
-            fs.delete(jvm.org.apache.hadoop.fs.Path(full), False)
-            deleted.append(full)
-    return sorted(deleted)
+        if m and m.group("binstant") in dead_bases.get((part, m.group("fid")), ()):
+            deleted.append(rel)
+    root = tablefs.local_root(path) or path
+    deleted = [rel for rel in deleted if tablefs.remove(spark, f"{root}/{rel}")]
+    root_local = _root_local(spark, path)
+    return sorted(f"{root_local}/{rel}" for rel in deleted)

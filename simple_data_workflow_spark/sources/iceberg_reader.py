@@ -57,12 +57,10 @@ import re
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
-from simple_data_workflow_spark.sources import localfs
+from simple_data_workflow_spark.sources import tablefs
 from simple_data_workflow_spark.smalldf import small_df
 from simple_data_workflow_spark.sources.delta_reader import (
     _cmp_path,
-    _jfs,
-    _read_bytes,
     _scan_spelling,
     _strip_scheme,
 )
@@ -81,27 +79,10 @@ class IcebergFeatureUnsupported(NotImplementedError):
 
 
 def _list_metadata_files(spark: SparkSession, path: str) -> list[str]:
-    loc = localfs.local_root(path)
-    if loc is not None:
-        import os as _os
-
-        if not _os.path.isdir(f"{loc}/metadata"):
-            raise FileNotFoundError(f"no metadata/ directory under {path}")
-        return [
-            n
-            for n in localfs.list_names(f"{loc}/metadata")
-            if n.endswith(".metadata.json")
-        ]
-    jvm, fs = _jfs(spark, path)
-    md_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/metadata")
-    if not fs.exists(md_dir):
+    names = tablefs.list_dir(spark, f"{path}/metadata")
+    if names is None:
         raise FileNotFoundError(f"no metadata/ directory under {path}")
-    names = []
-    for st in fs.listStatus(md_dir):
-        n = st.getPath().getName()
-        if n.endswith(".metadata.json"):
-            names.append(n)
-    return names
+    return [n for n in names if n.endswith(".metadata.json")]
 
 
 def _metadata_version(name: str) -> int:
@@ -114,24 +95,14 @@ def load_table_metadata(spark: SparkSession, path: str) -> dict:
     """Parse the CURRENT table metadata JSON: ``version-hint.text``
     names it when present (the HadoopTables convention); otherwise the
     highest-versioned ``*.metadata.json`` wins."""
-    loc = localfs.local_root(path)
-    if loc is not None:
-        import os as _os
-
-        hint_exists = _os.path.exists(f"{loc}/metadata/version-hint.text")
-    else:
-        jvm, fs = _jfs(spark, path)
-        hint = jvm.org.apache.hadoop.fs.Path(
-            f"{path}/metadata/version-hint.text"
-        )
-        hint_exists = fs.exists(hint)
+    hint_exists = tablefs.exists(spark, f"{path}/metadata/version-hint.text")
     names = _list_metadata_files(spark, path)
     if not names:
         raise FileNotFoundError(f"no *.metadata.json under {path}/metadata")
     chosen = None
     if hint_exists:
         v = int(
-            _read_bytes(spark, f"{path}/metadata/version-hint.text")
+            tablefs.read_file(spark, f"{path}/metadata/version-hint.text")
             .decode()
             .strip()
         )
@@ -143,7 +114,7 @@ def load_table_metadata(spark: SparkSession, path: str) -> dict:
             chosen = exact[0] if exact else None
     if chosen is None:
         chosen = max(names, key=_metadata_version)
-    raw = _read_bytes(spark, f"{path}/metadata/{chosen}").decode("utf-8")
+    raw = tablefs.read_file(spark, f"{path}/metadata/{chosen}").decode("utf-8")
     meta = json.loads(raw)
     fv = int(meta.get("format-version", 1))
     if fv > 3:
@@ -292,7 +263,7 @@ def _avro_records(spark: SparkSession, path: str):
     orders of magnitude cheaper and returns ordinary dicts."""
     from simple_data_workflow_spark.sources.avro_ocf import read_ocf
 
-    _schema, records = read_ocf(_read_bytes(spark, path))
+    _schema, records = read_ocf(tablefs.read_file(spark, path))
     yield from records
 
 
@@ -659,7 +630,7 @@ def _load_dv_positions(spark, dv_entries: list[dict]) -> dict:
     for d in dv_entries:
         raw = raw_cache.get(d["path"])
         if raw is None:
-            raw = _read_bytes(spark, d["path"])
+            raw = tablefs.read_file(spark, d["path"])
             raw_cache[d["path"]] = raw
         off, sz = d.get("offset"), d.get("size")
         if off is None or sz is None:

@@ -58,9 +58,8 @@ from simple_data_workflow_spark.sources.iceberg_reader import (
     _local_path,
     load_table_metadata,
 )
-from simple_data_workflow_spark.sources import localfs
+from simple_data_workflow_spark.sources import tablefs
 from simple_data_workflow_spark.smalldf import small_df
-from simple_data_workflow_spark.sources.delta_reader import _jfs
 
 
 class IcebergConcurrentWrite(RuntimeError):
@@ -427,7 +426,7 @@ def _write_avro(
     ``jsonDecoder`` — the SCHEMA fixes every numeric width, so py4j's
     int-vs-long boxing ambiguity (which made small values in
     ``["null","long"]`` unions unresolvable) cannot corrupt types."""
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     schema = jvm.org.apache.avro.Schema.Parser().parse(schema_json)
     py_schema = json.loads(schema_json)
     reader = jvm.org.apache.avro.generic.GenericDatumReader(schema)
@@ -523,7 +522,6 @@ def _stage_data_files(
     Spark strips into directory names while the real columns stay in
     the files."""
     spark = df.sparkSession
-    jvm, fs = _jfs(spark, path)
     spark.conf.set("spark.sql.parquet.fieldId.write.enabled", "true")
     # stamp ids via cast+alias, NOT DataFrame.to(): .to() elides
     # no-op columns (silently dropping their metadata) and poisons
@@ -542,64 +540,21 @@ def _stage_data_files(
         sh = f"__icepart_{c}"
         df = df.withColumn(sh, F.col(c))
         shadows.append(sh)
-    stage_id = uuid.uuid4().hex
-    staging = f"{path}/.staging-{stage_id}"
+    staging = f"{path}/.staging-{uuid.uuid4().hex}"
     writer = df.write.mode("overwrite")
     if shadows:
         writer = writer.partitionBy(*shadows)
     writer.parquet(staging)
-
-    loc = localfs.local_root(path)
-    if loc is not None:
-        import os as _os
-
-        staging_local = f"{loc}/.staging-{stage_id}"
-
-        def walk(p):
-            for entry in sorted(_os.scandir(p), key=lambda e: e.path):
-                if entry.is_dir():
-                    yield from walk(entry.path)
-                else:
-                    yield entry.path, entry.stat().st_size
-
-        def move(full, dest):
-            _os.makedirs(dest.rsplit("/", 1)[0], exist_ok=True)
-            _os.rename(full, dest)
-
-        entries = list(walk(staging_local))
-        table_root = loc
-        cleanup = lambda: localfs.delete(staging_local, recursive=True)  # noqa: E731
-    else:
-
-        def jwalk(p):
-            for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(p)):
-                if st.isDirectory():
-                    yield from jwalk(str(st.getPath().toUri().getPath()))
-                else:
-                    yield str(st.getPath().toUri().getPath()), int(st.getLen())
-
-        def move(full, dest):
-            fs.mkdirs(jvm.org.apache.hadoop.fs.Path(dest.rsplit("/", 1)[0]))
-            if not fs.rename(
-                jvm.org.apache.hadoop.fs.Path(full),
-                jvm.org.apache.hadoop.fs.Path(dest),
-            ):
-                raise IOError(
-                    f"failed to move staged file into table: {dest}"
-                )
-
-        staging_local = jvm.org.apache.hadoop.fs.Path(staging).toUri().getPath()
-        entries = list(jwalk(staging))
-        table_root = path
-        cleanup = lambda: fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)  # noqa: E731
+    # names read off the disk join decoded roots (see tablefs.staged_files)
+    table_root = tablefs.local_root(path) or path
+    src = tablefs.local_root(staging) or staging
 
     files = []
-    for full, flen in entries:
-        name = full.rsplit("/", 1)[1]
-        if not name.endswith(".parquet"):
+    for rel, flen, _ in tablefs.staged_files(spark, staging):
+        if not rel.endswith(".parquet"):
             continue
-        rel = full[len(staging_local) + 1 :]
         segs = rel.split("/")
+        name = segs[-1]
         pv: dict[str, str | None] = {}
         clean_segs = []
         for seg in segs[:-1]:
@@ -614,7 +569,7 @@ def _stage_data_files(
                 clean_segs.append(seg)
         dest_rel = "/".join(["data", *clean_segs, name])
         dest = f"{table_root}/{dest_rel}"
-        move(full, dest)
+        tablefs.move(spark, f"{src}/{rel}", dest)
         try:
             import pyarrow.parquet as pq
 
@@ -625,13 +580,13 @@ def _stage_data_files(
             {
                 # manifests record the path under the TABLE ROOT as the
                 # caller spelled it (scheme preserved on remote roots)
-                "path": f"{path}/{dest_rel}" if loc is not None else dest,
+                "path": f"{path}/{dest_rel}",
                 "size": int(flen),
                 "record_count": int(nrec),
                 "partition_values": pv,
             }
         )
-    cleanup()
+    tablefs.remove(spark, staging, recursive=True)
     return files
 
 
@@ -644,51 +599,16 @@ def _publish_metadata_if_absent(
     spark: SparkSession, path: str, version: int, body: str
 ) -> bool:
     """HadoopTables convention: ``metadata/v<N>.metadata.json`` is the
-    commit point — publish if-absent (hard link on local FS, rename
-    elsewhere), then best-effort update ``version-hint.text``."""
-    loc = localfs.local_root(path)
-    if loc is not None:
-        won = localfs.write_if_absent(
-            f"{loc}/metadata/v{version}.metadata.json", body.encode("utf-8")
-        )
-        if won:
-            localfs.write_bytes(
-                f"{loc}/metadata/version-hint.text", str(version).encode()
-            )
-        return won
-    jvm, fs = _jfs(spark, path)
-    md = f"{path}/metadata"
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(md))
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{md}/.tmp-{uuid.uuid4().hex}")
-    out = fs.create(tmp, False)
-    try:
-        out.write(body.encode("utf-8"))
-    finally:
-        out.close()
-    target = jvm.org.apache.hadoop.fs.Path(f"{md}/v{version}.metadata.json")
-    scheme = target.toUri().getScheme()
-    if scheme in (None, "file"):
-        t_nio = jvm.java.io.File(target.toUri().getPath()).toPath()
-        s_nio = jvm.java.io.File(tmp.toUri().getPath()).toPath()
-        try:
-            jvm.java.nio.file.Files.createLink(t_nio, s_nio)
-            won = True
-        except Exception:
-            won = False
-        fs.delete(tmp, False)
-    else:
-        if fs.exists(target):
-            fs.delete(tmp, False)
-            won = False
-        else:
-            won = fs.rename(tmp, target)
+    commit point — publish if-absent (``tablefs.publish_if_absent``),
+    then best-effort update ``version-hint.text``."""
+    won = tablefs.publish_if_absent(
+        spark, f"{path}/metadata", f"v{version}.metadata.json",
+        body.encode("utf-8"),
+    )
     if won:
-        hint = jvm.org.apache.hadoop.fs.Path(f"{md}/version-hint.text")
-        hout = fs.create(hint, True)
-        try:
-            hout.write(str(version).encode())
-        finally:
-            hout.close()
+        tablefs.write_file(
+            spark, f"{path}/metadata/version-hint.text", str(version).encode()
+        )
     return won
 
 
@@ -1036,7 +956,7 @@ def iceberg_write(
         if exists:
             import re as _re
 
-            jvm, fs = _jfs(spark, path)
+            jvm, fs = tablefs.hadoop_fs(spark, path)
             for st in fs.listStatus(
                 jvm.org.apache.hadoop.fs.Path(f"{path}/metadata")
             ):
@@ -1380,7 +1300,7 @@ def _stage_position_deletes_packed(
     )
     name = f"delete-{uuid.uuid4().hex}-packed.parquet"
     dest_rel = f"data/{name}"
-    loc_root = localfs.local_root(path)
+    loc_root = tablefs.local_root(path)
     if loc_root is not None:
         import os as _os
 
@@ -1394,7 +1314,7 @@ def _stage_position_deletes_packed(
         buf = _io.BytesIO()
         pq.write_table(tbl, buf, compression="snappy")
         data = buf.getvalue()
-        jvm, fs = _jfs(spark, path)
+        jvm, fs = tablefs.hadoop_fs(spark, path)
         fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{path}/data"))
         out = fs.create(
             jvm.org.apache.hadoop.fs.Path(f"{path}/{dest_rel}"), False
@@ -1448,7 +1368,7 @@ def _stage_position_deletes(
             "pos", metadata={"parquet.field.id": _POS_DELETE_POS_ID}
         ),
     )
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     staging = f"{path}/.staging-{uuid.uuid4().hex}"
     rows.write.mode("overwrite").parquet(staging)
     staged = []
@@ -1512,7 +1432,7 @@ def _publish_dml_snapshot(
     should check the snapshot id before/after)."""
     import re as _re
 
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     for attempt in range(_retries):
         now_ms = int(time.time() * 1000)
         # a caller that pre-stamped its staged files (DV blobs carry
@@ -1775,7 +1695,7 @@ def iceberg_upgrade_format(
 
     if target not in (2, 3):
         raise ValueError(f"can only upgrade to format-version 2 or 3, not {target}")
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     for attempt in range(_retries):
         meta = load_table_metadata(spark, path)
         fv = int(meta.get("format-version", 1))
@@ -1906,7 +1826,7 @@ def _stage_dv_deletes(
         return []
     seq_est = int(meta.get("last-sequence-number", 0)) + 1
     fbytes, descs = build_dv_file(sorted(dvs), snapshot_id, seq_est)
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     dest = f"{path}/data/dv-{uuid.uuid4().hex}.puffin"
     fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{path}/data"))
     out = fs.create(jvm.org.apache.hadoop.fs.Path(dest), False)
@@ -2188,7 +2108,7 @@ def iceberg_equality_delete(
             for c in eq_cols
         ]
     )
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     staging = f"{path}/.staging-{uuid.uuid4().hex}"
     staged_df.coalesce(1).write.mode("overwrite").parquet(staging)
     import pyarrow.parquet as pq
@@ -2389,7 +2309,7 @@ def iceberg_expire_snapshots(
         dead_files |= f - live_files
         dead_metas |= m - live_metas
 
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     for p in sorted(dead_files | dead_metas):
         fs.delete(jvm.org.apache.hadoop.fs.Path(p), False)
 
@@ -2482,7 +2402,7 @@ def _evolve_schema(spark: SparkSession, path: str, mutate, _retries: int = 5) ->
     import copy
     import re as _re
 
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     for attempt in range(_retries):
         meta = load_table_metadata(spark, path)
         cur = _current_schema(meta)
@@ -2632,7 +2552,7 @@ def iceberg_rollback(
     committed). Returns the restored snapshot id."""
     import re as _re
 
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     for attempt in range(_retries):
         meta = load_table_metadata(spark, path)
         snaps = meta.get("snapshots") or []
@@ -2693,7 +2613,7 @@ def iceberg_cherry_pick(
     drop the intervening commits)."""
     import re as _re
 
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     for attempt in range(_retries):
         meta = load_table_metadata(spark, path)
         snaps = meta.get("snapshots") or []
@@ -2752,7 +2672,7 @@ def iceberg_update_spec(
     Returns the new spec id."""
     import re as _re
 
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     for _attempt in range(_retries):
         meta = load_table_metadata(spark, path)
         if int(meta.get("format-version", 1)) < 2:
@@ -2857,7 +2777,7 @@ def _mutate_refs(spark: SparkSession, path: str, mutate, _retries: int = 5):
     metadata version. Returns the published metadata."""
     import re as _re
 
-    jvm, fs = _jfs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     for _attempt in range(_retries):
         meta = load_table_metadata(spark, path)
         meta_out = dict(meta)

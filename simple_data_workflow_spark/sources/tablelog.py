@@ -58,7 +58,7 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
-from simple_data_workflow_spark.sources import localfs
+from simple_data_workflow_spark.sources import tablefs
 from simple_data_workflow_spark.smalldf import small_df
 
 #: a full-state checkpoint is written after every Nth commit; snapshot
@@ -377,23 +377,9 @@ class ConcurrentWriteConflict(RuntimeError):
 # ---------------------------------------------------------------- fs helpers
 
 
-def _fs(spark: SparkSession, path: str):
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    return jvm, jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-
-
 def _list_log(spark: SparkSession, path: str) -> tuple[list[int], list[int]]:
     """(entry versions, checkpoint versions), each sorted ascending."""
-    loc = localfs.local_root(path)
-    if loc is not None:
-        names = localfs.list_names(f"{loc}/_log")
-    else:
-        jvm, fs = _fs(spark, path)
-        log_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_log")
-        if not fs.exists(log_dir):
-            return [], []
-        names = [st.getPath().getName() for st in fs.listStatus(log_dir)]
+    names = tablefs.list_dir(spark, f"{path}/_log") or []
     entries, cps = [], []
     for name in names:
         if name.startswith("."):
@@ -406,66 +392,18 @@ def _list_log(spark: SparkSession, path: str) -> tuple[list[int], list[int]]:
 
 
 def _read_json(spark: SparkSession, path: str, name: str) -> dict:
-    loc = localfs.local_root(path)
-    if loc is not None:
-        return json.loads(localfs.read_bytes(f"{loc}/_log/{name}"))
-    jvm, fs = _fs(spark, path)
-    p = jvm.org.apache.hadoop.fs.Path(f"{path}/_log/{name}")
-    stream = fs.open(p)
-    try:
-        data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-    finally:
-        stream.close()
-    return json.loads(data.decode("utf-8"))
+    return json.loads(tablefs.read_file(spark, f"{path}/_log/{name}"))
 
 
 def _write_json_if_absent(
     spark: SparkSession, path: str, name: str, payload: dict
 ) -> bool:
-    """Stage under a dot-name, then publish to ``name`` if-absent —
-    the atomic commit primitive. Returns whether the publish won.
-
-    On local filesystems the publish is ``java.nio.Files.createLink``
-    (a hard link to the final name): POSIX ``link(2)`` fails with
-    EEXIST atomically, so two racing writers can never both win — the
-    exists+rename fallback used on other schemes is check-then-act
-    (RawLocalFileSystem's ``rename`` overwrites an existing
-    destination, so without the link primitive a sub-millisecond race
-    could clobber a just-won commit; on HDFS ``rename`` itself refuses
-    an existing destination, so the fallback is safe there too — the
-    documented best-effort caveat is object stores without an if-absent
-    primitive, same one the real formats carry)."""
-    loc = localfs.local_root(path)
-    if loc is not None:
-        return localfs.write_if_absent(
-            f"{loc}/_log/{name}", json.dumps(payload).encode("utf-8")
-        )
-    jvm, fs = _fs(spark, path)
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{path}/_log"))
-    tmp = jvm.org.apache.hadoop.fs.Path(f"{path}/_log/.tmp-{uuid.uuid4().hex}.json")
-    out = fs.create(tmp, False)
-    try:
-        out.write(json.dumps(payload).encode("utf-8"))
-    finally:
-        out.close()
-    target = jvm.org.apache.hadoop.fs.Path(f"{path}/_log/{name}")
-    scheme = target.toUri().getScheme()
-    if scheme in (None, "file"):
-        t_nio = jvm.java.io.File(target.toUri().getPath()).toPath()
-        s_nio = jvm.java.io.File(tmp.toUri().getPath()).toPath()
-        try:
-            jvm.java.nio.file.Files.createLink(t_nio, s_nio)
-            fs.delete(tmp, False)
-            return True
-        except Exception as exc:  # EEXIST: another writer won the slot
-            if "FileAlreadyExistsException" not in str(exc):
-                raise
-            fs.delete(tmp, False)
-            return False
-    if not fs.exists(target) and fs.rename(tmp, target):
-        return True
-    fs.delete(tmp, False)
-    return False
+    """Publish ``payload`` as ``_log/name`` if-absent — the atomic
+    commit primitive (``tablefs.publish_if_absent``). Returns whether
+    the publish won."""
+    return tablefs.publish_if_absent(
+        spark, f"{path}/_log", name, json.dumps(payload).encode("utf-8")
+    )
 
 
 # ------------------------------------------------------------- log resolve
@@ -654,39 +592,23 @@ def _entry_adds(e: dict) -> list[str]:
 
 
 def _stage_data_files(df: DataFrame, path: str, writer=None) -> list[str]:
-    """Write ``df`` under ``data/.stage-*`` (invisible), rename each
+    """Write ``df`` under ``data/.stage-*`` (invisible), move each
     parquet part to a uuid name directly under ``data/``, return the
     names. Files stay invisible until a log entry references them."""
     spark = df.sparkSession
-    stage_id = uuid.uuid4().hex
-    staging = f"{path}/data/.stage-{stage_id}"
+    staging = f"{path}/data/.stage-{uuid.uuid4().hex}"
     if writer is not None:
         writer(df, staging)
     else:
         df.write.mode("overwrite").parquet(staging)
-    loc = localfs.local_root(path)
     files = []
-    if loc is not None:
-        staging_loc = f"{loc}/data/.stage-{stage_id}"
-        for name in sorted(localfs.list_names(staging_loc)):
-            if not name.endswith(".parquet"):
-                continue
+    src = tablefs.local_root(staging) or staging
+    for rel, _, _ in tablefs.staged_files(spark, staging):
+        if rel.endswith(".parquet"):
             final = f"{uuid.uuid4().hex}.parquet"
-            os.rename(f"{staging_loc}/{name}", f"{loc}/data/{final}")
+            tablefs.move(spark, f"{src}/{rel}", f"{path}/data/{final}")
             files.append(final)
-        localfs.delete(staging_loc, recursive=True)
-        return files
-    jvm, fs = _fs(spark, path)
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(staging)):
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        final = f"{uuid.uuid4().hex}.parquet"
-        fs.rename(
-            st.getPath(), jvm.org.apache.hadoop.fs.Path(f"{path}/data/{final}")
-        )
-        files.append(final)
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    tablefs.remove(spark, staging, recursive=True)
     return files
 
 
@@ -1063,7 +985,7 @@ def table_commit(
             empties = [f for f in files if f not in entry["stats"]]
             files = [f for f in files if f in entry["stats"]]
             entry["files"] = files
-            jvm_, fs_ = _fs(spark, path)
+            jvm_, fs_ = tablefs.hadoop_fs(spark, path)
             for f in empties:
                 with contextlib.suppress(Exception):
                     fs_.delete(
@@ -1871,7 +1793,7 @@ def table_version_at_timestamp(
     entries, _ = _list_log(spark, path)
     if not entries:
         raise FileNotFoundError(f"no table log under {path}")
-    jvm, fs = _fs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     best: int | None = None
     for v in entries:
         e = _read_json(spark, path, f"{v:08d}.json")
@@ -1933,7 +1855,7 @@ def table_history(spark: SparkSession, path: str) -> list[dict]:
     operability surface, answered from metadata alone."""
     out = []
     entries, _ = _list_log(spark, path)
-    jvm, fs = _fs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     for v in entries:
         e = _read_json(spark, path, f"{v:08d}.json")
         stats = e.get("stats")
@@ -1982,7 +1904,7 @@ def _register_clone_backref(
     which vacuum garbage-collects when it finds no log at ``dst`` —
     the safe order; the reverse would let a racing vacuum reap files
     the just-committed clone references)."""
-    jvm, fs = _fs(spark, src_root)
+    jvm, fs = tablefs.hadoop_fs(spark, src_root)
     fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{src_root}/_clones"))
     p = jvm.org.apache.hadoop.fs.Path(
         f"{src_root}/_clones/{uuid.uuid4().hex}.json"
@@ -2014,7 +1936,7 @@ def _clone_referenced_names(
     and reaping it would let a later vacuum corrupt the live clone
     (the r9 TOCTOU). ``gc_before_ms=None`` disables GC outright.
     Cost ∝ clone count × clone log size — metadata, never data."""
-    jvm, fs = _fs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     cdir = jvm.org.apache.hadoop.fs.Path(f"{path}/_clones")
     if not fs.exists(cdir):
         return set()
@@ -2117,7 +2039,7 @@ def table_vacuum(
         referenced.update(
             _clone_referenced_names(spark, path, gc_before_ms=horizon_ms)
         )
-    jvm, fs = _fs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     data_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/data")
     if not fs.exists(data_dir):
         return 0
@@ -3328,7 +3250,7 @@ def table_compact(
     conflict rather than being silently dropped. Returns the new
     version."""
     state = _resolve_state(spark, path, None)
-    jvm, fs = _fs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     total = 0
     for f in state["files"]:
         total += fs.getFileStatus(
@@ -3392,7 +3314,7 @@ def table_compact_small(
     files stay membership-prunable. Returns the new version (current
     one if fewer than two small files exist — nothing to pack)."""
     state = _resolve_state(spark, path, None)
-    jvm, fs = _fs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     threshold = small_file_mb * 1024 * 1024
     small, small_bytes = [], 0
     for f in state["files"]:
@@ -3482,7 +3404,7 @@ def table_truncate_history(
             },
         )
     state = _resolve_state(spark, path, cut)
-    jvm, fs = _fs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     cp_name = f"{cut:08d}.checkpoint.json"
     payload = {
         "files": state["files"],
@@ -4173,7 +4095,7 @@ def table_files_df(
     maintenance decisions read: small-file ratios for compaction,
     DV density for purge scheduling, per-commit data distribution."""
     state = _resolve_state(spark, path, version)
-    jvm, fs = _fs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
     rows = []
     for f in state["files"]:
         st = state["stats"].get(f, {})
@@ -4292,8 +4214,6 @@ def table_publish_from(spark: SparkSession, src: str, staged: str) -> int:
             f"was cloned at {base}; re-clone, re-audit, re-publish"
         )
     st = _resolve_state(spark, staged, None)
-    jvm, fs = _fs(spark, src)
-    conf = spark._jsc.hadoopConfiguration()
     staged_abs = _abs_root(staged)
 
     def _adopt(ref: str) -> str:
@@ -4301,26 +4221,13 @@ def table_publish_from(spark: SparkSession, src: str, staged: str) -> int:
             if ref.startswith(src_abs + "/data/"):
                 return ref.rsplit("/", 1)[-1]  # fold back to our basename
             return ref  # third-table ref: passes through, back-ref below
-        # the stage's own immutable file: link (or copy) into src/data
-        name = ref
-        s_path = jvm.org.apache.hadoop.fs.Path(f"{staged_abs}/data/{name}")
-        t_path = jvm.org.apache.hadoop.fs.Path(f"{src_abs}/data/{name}")
-        if t_path.toUri().getScheme() in (None, "file"):
-            t_nio = jvm.java.io.File(t_path.toUri().getPath()).toPath()
-            s_nio = jvm.java.io.File(s_path.toUri().getPath()).toPath()
-            try:
-                jvm.java.nio.file.Files.createLink(t_nio, s_nio)
-            except Exception as exc:
-                # uuid names are unique per staging write: an existing
-                # target IS this same file, linked by an earlier
-                # publish attempt that lost its commit race
-                if "FileAlreadyExistsException" not in str(exc):
-                    raise
-        elif not fs.exists(t_path):
-            jvm.org.apache.hadoop.fs.FileUtil.copy(
-                fs, s_path, fs, t_path, False, conf
-            )
-        return name
+        # the stage's own immutable file: link (or copy) into src/data;
+        # uuid names are unique per staging write, so an existing target
+        # IS this file, placed by an earlier publish that lost its race
+        tablefs.link_or_copy(
+            spark, f"{staged_abs}/data/{ref}", f"{src_abs}/data/{ref}"
+        )
+        return ref
 
     files = [_adopt(f) for f in st["files"]]
     name_map = dict(zip(st["files"], files))
@@ -4392,7 +4299,7 @@ def table_verify(
     if not entries and not cps:
         return {"ok": False, "issues": [f"no table log under {path}"],
                 "checked_files": 0}
-    jvm, fs = _fs(spark, path)
+    jvm, fs = tablefs.hadoop_fs(spark, path)
 
     def _exists(ref: str) -> bool:
         return fs.exists(jvm.org.apache.hadoop.fs.Path(_data_path(path, ref)))

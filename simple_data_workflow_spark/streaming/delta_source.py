@@ -57,10 +57,18 @@ _PHYS_KEY = "delta.columnMapping.physicalName"
 _ID_KEY = "delta.columnMapping.id"
 
 
-def _local_root(path: str) -> str:
-    if "://" in path or path.startswith("file:"):
-        return urllib.parse.urlparse(path).path
-    return path
+def _local(path: str) -> str:
+    """Plain-local path for ``path``. This source reads through
+    ``open`` and ``pyarrow.fs.LocalFileSystem`` only, so a path on any
+    other filesystem is refused rather than mapped onto a local one."""
+    from simple_data_workflow_spark.sources import tablefs
+
+    loc = tablefs.local_root(path)
+    if loc is None:
+        raise NotImplementedError(
+            f"deltalog streaming reads local tables only, not {path!r}"
+        )
+    return loc
 
 
 def _list_log(path: str) -> list[int]:
@@ -69,7 +77,7 @@ def _list_log(path: str) -> list[int]:
 
     fs = pafs.LocalFileSystem()
     sel = pafs.FileSelector(
-        f"{_local_root(path)}/_delta_log", allow_not_found=True
+        f"{_local(path)}/_delta_log", allow_not_found=True
     )
     out = []
     for info in fs.get_file_info(sel):
@@ -83,7 +91,7 @@ def _list_log(path: str) -> list[int]:
 
 def _read_commit(path: str, version: int) -> list[dict]:
     with open(
-        f"{_local_root(path)}/_delta_log/{version:020d}.json", "rb"
+        f"{_local(path)}/_delta_log/{version:020d}.json", "rb"
     ) as f:
         return [
             json.loads(line)
@@ -208,7 +216,7 @@ class DeltaStreamReader(DataSourceStreamReader):
         lo, hi = start["version"], end["version"]
         have = set(_list_log(self._path))
         parts: list[_DeltaFilePartition] = []
-        root = _local_root(self._path)
+        root = _local(self._path)
         for v in range(lo + 1, hi + 1):
             if v not in have:
                 raise ValueError(
@@ -246,7 +254,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                         )
                     parts.append(
                         _DeltaFilePartition(
-                            _local_root(full),
+                            _local(full),
                             v,
                             cmap=self._cmap,
                             idnames=self._idnames,
@@ -286,7 +294,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                     )
 
                     def _rb(p):
-                        with open(_local_root(p), "rb") as fh:
+                        with open(_local(p), "rb") as fh:
                             return fh.read()
 
                     dv_pos = [
@@ -306,7 +314,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                     )
                 parts.append(
                     _DeltaFilePartition(
-                        _local_root(full),
+                        _local(full),
                         v,
                         cmap=self._cmap,
                         idnames=self._idnames,

@@ -72,13 +72,20 @@ CHANGE_COL = "_change_type"
 
 
 def _fs_for(path: str):
+    """``(pyarrow filesystem, root)`` for ``path``. Only a scheme-less
+    path falls back to the local filesystem; a URI Arrow cannot mount
+    (e.g. ``s3a://``) raises rather than reading as an empty table."""
+    import pyarrow as pa
     import pyarrow.fs as pafs
 
     try:
-        fs, root = pafs.FileSystem.from_uri(path)
-    except pafs.lib.ArrowInvalid:
-        fs, root = pafs.LocalFileSystem(), path
-    return fs, root
+        return pafs.FileSystem.from_uri(path)
+    except pa.ArrowInvalid:
+        from simple_data_workflow_spark.sources import tablefs
+
+        if tablefs.local_root(path) is None:
+            raise
+        return pafs.LocalFileSystem(), path
 
 
 def _data_ref(root: str, f: str) -> str:
@@ -380,33 +387,27 @@ def _footer_stats(fs, root: str, name: str) -> dict:
 
 def _publish_if_absent(fs, root: str, name: str, payload: bytes) -> bool:
     """Publish ``payload`` to ``_log/<name>`` if-absent; returns whether
-    this writer won the slot. On local filesystems the publish is
-    ``os.link`` (POSIX ``link(2)`` fails EEXIST atomically), the SAME
-    primitive the JVM batch path uses — so a streaming sink and a
+    this writer won the slot. On local filesystems this is the batch
+    path's own primitive (``tablefs.write_if_absent``, a POSIX
+    ``link(2)`` that fails EEXIST atomically), so a streaming sink and a
     concurrent batch appender contending for one slot can never both
     win, and neither can clobber the other. Non-local filesystems fall
     back to check-then-move (best-effort, the documented object-store
     caveat every log-format carries without a coordination layer)."""
-    import os
     import uuid as _uuid
 
     import pyarrow.fs as pafs
 
+    from simple_data_workflow_spark.sources import tablefs
+
+    slot = f"{root}/_log/{name}"
+    if isinstance(fs, pafs.LocalFileSystem):
+        return tablefs.write_if_absent(slot, payload)
+    if fs.get_file_info(slot).type.name != "NotFound":
+        return False
     tmp = f"{root}/_log/.tmp-{_uuid.uuid4().hex}.json"
     with fs.open_output_stream(tmp) as out:
         out.write(payload)
-    slot = f"{root}/_log/{name}"
-    if isinstance(fs, pafs.LocalFileSystem):
-        try:
-            os.link(tmp, slot)
-            os.unlink(tmp)
-            return True
-        except FileExistsError:
-            os.unlink(tmp)
-            return False
-    if fs.get_file_info(slot).type.name != "NotFound":
-        fs.delete_file(tmp)
-        return False
     fs.move(tmp, slot)
     return True
 
@@ -881,8 +882,8 @@ class TablelogStreamWriter(DataSourceStreamArrowWriter):
     stream before this sink (documented boundary, not silent).
 
     Slot publication uses the same atomic if-absent primitive as the
-    batch path (``os.link`` on local filesystems — POSIX ``link(2)``
-    fails EEXIST atomically), so the sink is safe against CONCURRENT
+    batch path (``tablefs.write_if_absent`` on local filesystems — POSIX
+    ``link(2)`` fails EEXIST atomically), so the sink is safe against CONCURRENT
     BATCH APPENDERS on the same table: one of the two racing commits
     wins each slot, the loser retries the next. Replay dedup is scoped
     per query by ``stream_app_id`` (derived from the checkpoint
@@ -997,8 +998,8 @@ class TablelogStreamWriter(DataSourceStreamArrowWriter):
         for _ in range(10):
             versions = _list_entry_versions(self._path)
             next_v = (versions[-1] + 1) if versions else 0
-            # atomic if-absent publish (os.link on local FS — the same
-            # primitive the JVM batch path uses), so racing a
+            # atomic if-absent publish (link(2) on local FS — the same
+            # primitive the batch path uses), so racing a
             # concurrent BATCH appender can no longer clobber either
             # side's just-won commit; a lost race re-lists for the
             # next slot

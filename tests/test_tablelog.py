@@ -1,5 +1,7 @@
 """Transaction-log table format: atomic commits, time travel, vacuum."""
 
+import pytest
+
 from simple_data_workflow_spark.sources.tablelog import (
     table_commit,
     table_history,
@@ -1106,15 +1108,21 @@ def test_decimal_stats_widen_not_round_inward(spark, tmp_path):
     assert got.count() == 1  # float-rounded bound must not exclude it
 
 
-def test_publish_if_absent_is_exclusive(spark, tmp_path):
+@pytest.mark.parametrize("route", ["local", "hadoop"])
+def test_publish_if_absent_is_exclusive(spark, tmp_path, monkeypatch, route):
     """Two writers to the same log slot: exactly one wins, and the
     loser can never clobber the winner's payload (local-FS publish is
     a hard link — POSIX link(2) fails EEXIST atomically, unlike
-    RawLocalFileSystem rename which overwrites)."""
+    RawLocalFileSystem rename which overwrites). The ``hadoop`` route
+    forces the Hadoop FileSystem branch onto the same directory."""
+    from simple_data_workflow_spark.sources import tablefs
     from simple_data_workflow_spark.sources.tablelog import (
         _read_json,
         _write_json_if_absent,
     )
+
+    if route == "hadoop":
+        monkeypatch.setattr(tablefs, "local_root", lambda p: None)
 
     p = str(tmp_path / "excl")
     assert _write_json_if_absent(spark, p, "x.json", {"a": 1})
