@@ -7,12 +7,16 @@ so levels + orderedness live in a small driver-side ``CategoryRegistry``
 O(#levels), never O(data).
 
 Scale notes:
-- dummy detection folds all candidate columns into ONE aggregate pass
-  (``collect_set`` per column, capped) instead of one distinct-scan per
-  column (SURVEY.md §7.4.5);
-- level discovery for one-hot is likewise a single bounded aggregate;
-  cardinality is capped explicitly so a 100 TB string column can never
-  explode the driver.
+- dummy detection and level discovery share ONE aggregate pass. A dummy
+  holds at most 3 distinct integral values summing to 1, so that pass
+  keeps only min, max and a fraction flag per numeric column — never
+  its distinct values. A second pass runs only for numeric columns whose
+  min and max still admit a dummy, and reads only their middle value
+  (SURVEY.md §7.4.5);
+- level discovery collects each category column's sorted distinct set
+  and keeps the first ``MAX_LEVELS + 1``: the cap bounds what reaches
+  the driver, not what the aggregate collects, and a column past it
+  raises instead of being one-hot encoded.
 """
 
 from __future__ import annotations
@@ -24,10 +28,9 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from simple_data_workflow_spark.functions.cols import qcol
-from pyspark.sql.types import BooleanType, NumericType, StringType
+from pyspark.sql.types import BooleanType, IntegralType, NumericType, StringType
 
 MAX_LEVELS = 1000  # hard cap on per-column category cardinality
-_DUMMY_CAP = 4  # a 0/1 dummy has ≤2 distinct values; cap the collected set
 
 
 @dataclass
@@ -118,24 +121,84 @@ def registry_from_schema(df: DataFrame) -> CategoryRegistry:
     return registry
 
 
+def _levels_agg(c: str):
+    """Sorted distinct values of ``c``, cut to ``MAX_LEVELS + 1``."""
+    return F.slice(F.array_sort(F.collect_set(qcol(c))), 1, MAX_LEVELS + 1)
+
+
+def _checked_levels(c: str, levels) -> list:
+    levels = levels or []
+    if len(levels) > MAX_LEVELS:
+        raise ValueError(
+            f"column {c!r} has >{MAX_LEVELS} distinct values; "
+            "not a categorical — raise MAX_LEVELS or pass explicit categories"
+        )
+    return levels
+
+
 def _discover_levels(df: DataFrame, cols: list[str]) -> dict[str, list]:
     """One aggregate pass collecting (capped, sorted) level sets for many
     columns at once. Map-side partial aggregation keeps the shuffled state
     tiny; the collected result is O(levels), not O(rows)."""
     if not cols:
         return {}
-    aggs = [F.slice(F.array_sort(F.collect_set(qcol(c))), 1, MAX_LEVELS + 1).alias(c) for c in cols]
-    row = df.agg(*aggs).first().asDict()
-    out = {}
-    for c, levels in row.items():
-        levels = levels or []
-        if len(levels) > MAX_LEVELS:
-            raise ValueError(
-                f"column {c!r} has >{MAX_LEVELS} distinct values; "
-                "not a categorical — raise MAX_LEVELS or pass explicit categories"
-            )
-        out[c] = levels
-    return out
+    row = df.agg(*[_levels_agg(c).alias(c) for c in cols]).first()
+    return {c: _checked_levels(c, row[c]) for c in cols}
+
+
+def _dummy_aggs(c: str, dtype) -> list:
+    """min and max of ``c``, plus — unless integral — a flag for any value
+    whose double is not an integer: fractions, NaN and ±inf (the
+    reference downcasts to int, so a decimal is judged by its double)."""
+    aggs = [F.min(qcol(c)).alias(f"__lo_{c}"), F.max(qcol(c)).alias(f"__hi_{c}")]
+    if not isinstance(dtype, IntegralType):
+        aggs.append(
+            F.max(F.when(qcol(c).cast("double") % 1 != 0, 1)).alias(f"__frac_{c}")
+        )
+    return aggs
+
+
+def _dummy_columns(df: DataFrame, numeric_cols: list[str], row: dict) -> list[str]:
+    """Numeric columns whose distinct non-NULL values sum to 1 (reference
+    ``unique().sum() == 1``, src/tasks.py:193-208), given the
+    :func:`_dummy_aggs` row.
+
+    Such a set holds 1-3 integral values, so min and max nearly decide
+    it: min = max is a dummy iff it is 1, and otherwise the column stays
+    a candidate only if an integer in [min, max] can complete the sum to
+    1. One more pass takes, per candidate, min and max of the values
+    other than its min and max: none, or a single middle value that
+    completes the sum, makes a dummy; two different ones mean 4+ distinct
+    values. ``int()`` and Python ints keep the sums exact past 2**53."""
+    dummies, middles = [], {}
+    for c in numeric_cols:
+        lo, hi = row[f"__lo_{c}"], row[f"__hi_{c}"]
+        if lo is None or row.get(f"__frac_{c}"):
+            continue  # all NULL, or a non-integral value
+        a, b = int(lo), int(hi)
+        if lo == hi:
+            if a == 1:
+                dummies.append(c)
+        elif a <= 1 - a - b <= b:
+            middles[c] = (lo, hi)
+    if middles:
+        aggs = []
+        for c, (lo, hi) in middles.items():
+            t = df.schema[c].dataType
+            mid = F.when(~qcol(c).isin(F.lit(lo).cast(t), F.lit(hi).cast(t)), qcol(c))
+            aggs += [F.min(mid).alias(f"__mlo_{c}"), F.max(mid).alias(f"__mhi_{c}")]
+        mrow = df.agg(*aggs).first()
+        for c, (lo, hi) in middles.items():
+            mlo, mhi = mrow[f"__mlo_{c}"], mrow[f"__mhi_{c}"]
+            if mlo is None:
+                total = int(lo) + int(hi)
+            elif mlo == mhi:
+                total = int(lo) + int(mlo) + int(hi)
+            else:
+                continue  # 4+ distinct values
+            if total == 1:
+                dummies.append(c)
+    return [c for c in numeric_cols if c in dummies]
 
 
 def factor_wrangler(
@@ -167,42 +230,35 @@ def factor_wrangler(
     categories = dict(categories or {})
 
     string_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, StringType)]
-    numeric_cols = [f.name for f in df.schema.fields if isinstance(f.dataType, NumericType)]
+    numeric = [f for f in df.schema.fields if isinstance(f.dataType, NumericType)]
+    numeric = numeric if dummy_to_bool else []
 
-    # (b) one-pass dummy detection across all numeric columns
-    dummy_cols: list[str] = []
-    if dummy_to_bool and numeric_cols:
-        aggs = [
-            F.slice(F.array_sort(F.collect_set(qcol(c))), 1, _DUMMY_CAP).alias(c) for c in numeric_cols
-        ]
-        sets = df.agg(*aggs).first().asDict()
-        for c, vals in sets.items():
-            vals = [v for v in (vals or []) if v is not None]
-            # reference: unique().sum() == 1 (floats first downcast to int)
-            if vals and len(vals) < _DUMMY_CAP and all(float(v).is_integer() for v in vals):
-                if sum(int(v) for v in vals) == 1:
-                    dummy_cols.append(c)
-        if dummy_cols:
-            df = df.select(
-                *[
-                    qcol(c).cast(BooleanType()).alias(c) if c in dummy_cols else qcol(c)
-                    for c in df.columns
-                ]
-            )
-
-    # (a) + (c): which columns become categories
+    # (a) + (c): which columns may become categories
     to_cat = list(dict.fromkeys((string_cols if str_to_cat else []) + cat_cols))
-    to_cat = [c for c in to_cat if c not in dummy_cols]
+    discover = [c for c in to_cat if c not in categories]
+
+    # (b) dummy detection and the levels to discover: one aggregate pass
+    aggs = [a for f in numeric for a in _dummy_aggs(f.name, f.dataType)]
+    aggs += [_levels_agg(c).alias(f"__lv_{c}") for c in discover]
+    row = df.agg(*aggs).first().asDict() if aggs else {}
+    dummy_cols = _dummy_columns(df, [f.name for f in numeric], row)
+    if dummy_cols:
+        df = df.select(
+            *[
+                qcol(c).cast(BooleanType()).alias(c) if c in dummy_cols else qcol(c)
+                for c in df.columns
+            ]
+        )
 
     # (d) explicit domains: enforce, keep given order
     for c, levels in categories.items():
         df = df.withColumn(c, F.when(qcol(c).isin(list(levels)), qcol(c)).otherwise(F.lit(None)))
         registry.add(c, levels, ordered=c in ordered_cols)
 
-    # discover levels for the rest in one pass
-    discover = [c for c in to_cat if c not in categories]
-    for c, levels in _discover_levels(df, discover).items():
-        registry.add(c, levels, ordered=c in ordered_cols)
+    # discovered levels for the rest
+    for c in discover:
+        if c not in dummy_cols:
+            registry.add(c, _checked_levels(c, row[f"__lv_{c}"]), ordered=c in ordered_cols)
 
     # ordered columns the user named but nobody registered yet
     for c in ordered_cols:

@@ -20,12 +20,14 @@ Distributed design — nothing data-sized ever reaches the driver:
   normal draws (pred + N(0, σ̂)) — same first two moments, which is what
   the reference's own (stub) KL acceptance test checks
   (reference src/tests/test_tasks.py:465-470);
-- each sweep ends in an eager ``localCheckpoint``: lineage is truncated
-  every sweep, so the Catalyst plan depth stays CONSTANT across any
-  number of sweeps, and the saved draws reference materialized
-  checkpoint data — stacking the ``n_imputations`` outputs at the end
-  reads the checkpoints instead of replaying up to
-  ``n_burnin + n_imputations·n_spread`` sweeps of lineage per draw.
+- each sweep ends in a lazy ``localCheckpoint`` (``eager=False``):
+  lineage is truncated every sweep, so the Catalyst plan depth stays
+  CONSTANT across any number of sweeps. The next fit's aggregate is the
+  job that materializes the checkpoint, so a sweep costs no job of its
+  own, and the saved draws reference checkpoint data — stacking the
+  ``n_imputations`` outputs at the end reads the checkpoints instead of
+  replaying up to ``n_burnin + n_imputations·n_spread`` sweeps of
+  lineage per draw.
   Superseded sweeps drop out of scope and their executor-local blocks
   are released by Spark's ContextCleaner; peak storage is a handful of
   materialized copies (MEMORY_AND_DISK, spills rather than OOMs). On a
@@ -33,9 +35,9 @@ Distributed design — nothing data-sized ever reaches the driver:
   here because the draws are hash-seeded and a retried run reproduces
   them exactly.
 
-Categorical/boolean columns are mode-filled once up front (the linear
-chained equations cover numeric columns, matching the reference's
-numeric usage).
+Categorical/boolean columns that hold a NULL are mode-filled once up
+front (the linear chained equations cover numeric columns, matching the
+reference's numeric usage).
 """
 
 from __future__ import annotations
@@ -46,6 +48,8 @@ import numpy as np
 from pyspark.sql import Column, DataFrame
 from pyspark.sql import functions as F
 from pyspark.sql.types import NumericType
+
+from simple_data_workflow_spark.functions.cols import qcol
 
 
 def _u01(seed_col: Column) -> Column:
@@ -230,22 +234,24 @@ def mice_impute(
         for f in df.schema.fields
         if f.name in cols and isinstance(f.dataType, NumericType)
     ]
-    # one pass for BOTH the has-missing flags and the start-state means
+    other = [f.name for f in df.schema.fields if f.name in cols and f.name not in numeric]
+    # one pass for the has-missing flags of every column and the
+    # start-state means
     stats = df.agg(
-        *[F.max(F.when(F.col(c).isNull(), 1).otherwise(0)).alias(f"__na_{c}") for c in numeric],
+        *[F.max(qcol(c).isNull()).alias(f"__na_{c}") for c in numeric + other],
         *[F.avg(c).alias(f"__mu_{c}") for c in numeric],
     ).first()
-    na_numeric = [c for c in numeric if stats[f"__na_{c}"] == 1]
+    na_numeric = [c for c in numeric if stats[f"__na_{c}"]]
     if not na_numeric:
         raise ValueError("mice: no numeric column has missing values")
 
-    # non-numeric NA columns: mode/median fill once (chained equations are
-    # linear; reference usage imputes numeric regressors)
+    # non-numeric columns holding a NULL: mode fill once (chained
+    # equations are linear; reference usage imputes numeric regressors)
     from simple_data_workflow_spark.operators.na import _fill_values
 
-    other_na = [c for c in cols if c not in numeric]
+    other_na = [c for c in other if stats[f"__na_{c}"]]
     if other_na:
-        fills = _fill_values(df, other_na)
+        fills = _fill_values(df, other_na, {})
         if fills:
             df = df.fillna(fills)
 
@@ -256,10 +262,10 @@ def mice_impute(
     work = work.fillna(
         {c: stats[f"__mu_{c}"] for c in na_numeric if stats[f"__mu_{c}"] is not None}
     )
-    # eager checkpoint: materializes the start state AND pins the
-    # monotonically_increasing_id row ids (when generated here) so every
-    # sweep sees the same identities
-    work = work.localCheckpoint(eager=True)
+    # checkpoint the start state: once the first fit materializes it, the
+    # monotonically_increasing_id row ids (when generated here) are
+    # pinned, so every sweep sees the same identities
+    work = work.localCheckpoint(eager=False)
     if n_buckets is None:
         # per-bucket rows ≈ rows / (partitions · 8): parallelism tracks
         # the data instead of capping at a constant
@@ -287,10 +293,10 @@ def mice_impute(
                         c, F.when(F.col(f"__na_{c}"), pred + noise).otherwise(F.col(c))
                     )
             # truncate lineage EVERY sweep: constant plan depth, and the
-            # frames captured in `saved` stay valid materialized data (the
+            # frames captured in `saved` stay valid checkpoint data (the
             # old persist/unpersist chain invalidated earlier draws, which
             # then replayed their full sweep lineage when finally stacked)
-            work = work.localCheckpoint(eager=True)
+            work = work.localCheckpoint(eager=False)
         saved.append(
             work.select(
                 F.lit(len(saved)).cast("long").alias("iter"),

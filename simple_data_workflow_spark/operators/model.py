@@ -26,6 +26,15 @@ import numpy as np
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from simple_data_workflow_spark.functions.cols import qcol
+from simple_data_workflow_spark.operators.categorical import CategoryRegistry
+from simple_data_workflow_spark.operators.transforms import (
+    _gelman_aggs,
+    _gelman_apply,
+    _gelman_columns,
+    gelman_standardize_data,
+)
+
 
 @dataclass
 class OLSResult:
@@ -132,20 +141,78 @@ def run_model(df: DataFrame, y: str, X: Sequence[str]) -> OLSResult:
             aggs.append(F.sum(F.col(f"__x{i}") * F.col(f"__x{j}")).alias(f"__xx{i}_{j}"))
     row = work.agg(*aggs).first()
 
-    n = row["__n"]
     xtx = np.zeros((k, k))
     xty = np.zeros(k)
     for i in range(k):
         xty[i] = row[f"__xy{i}"]
         for j in range(i, k):
             xtx[i, j] = xtx[j, i] = row[f"__xx{i}_{j}"]
+    return _ols(regs, row["__n"], xtx, xty, row["__yy"])
+
+
+def _ols(regs: list[str], n: int, xtx: np.ndarray, xty: np.ndarray, yy: float) -> OLSResult:
+    """Solve the normal equations on the driver (k×k)."""
+    k = len(regs)
     beta = np.linalg.solve(xtx, xty)
-    rss = float(row["__yy"] - xty @ beta)
+    rss = float(yy - xty @ beta)
     df_resid = n - k
     sigma2 = rss / df_resid if df_resid > 0 else float("nan")
     cov = sigma2 * np.linalg.inv(xtx)
     bse = np.sqrt(np.diag(cov))
     return OLSResult(regressors=regs, params=beta, bse=bse, df_resid=df_resid, nobs=n)
+
+
+def standardize_and_fit(
+    df: DataFrame, registry: CategoryRegistry | None, y: str, X: Sequence[str]
+) -> tuple[DataFrame, OLSResult]:
+    """``gelman_standardize_data(df, registry)`` and ``run_model`` on it,
+    from ONE aggregate pass over ``df``.
+
+    The Gelman transform is affine per column, z = (x − m) / d, so the
+    standardized XᵀX, Xᵀy and yᵀy over the complete rows follow from the
+    raw columns: Σ zᵢzⱼ = n·(covᵢⱼ + (cᵢ − mᵢ)(cⱼ − mⱼ)) / (dᵢdⱼ), with
+    n, the means c and the population covariances cov taken over the
+    rows where y and every regressor are non-NULL (``covar_pop`` updates
+    stably, so no large raw cross-products cancel). The same aggregate
+    yields the avg/stddev_samp literals the standardized frame uses, so
+    that frame is identical to ``gelman_standardize_data``'s; the fit
+    differs from ``run_model``'s by round-off only. A design the affine
+    form does not cover — a regressor the transform leaves unchanged, a
+    zero or non-finite scale, no complete row — falls back to
+    ``run_model`` on the standardized frame, one more pass."""
+    regs = select_regressors(df.columns, y, X)
+    if not regs:
+        raise ValueError(f"no regressors match {X!r}")
+    numeric, boolean = _gelman_columns(df, registry)
+    design = [y] + regs
+    if not all(c in numeric or c in boolean for c in design):
+        std = gelman_standardize_data(df, registry)
+        return std, run_model(std, y, X)
+    complete = F.lit(True)
+    for c in design:
+        complete = complete & qcol(c).isNotNull()
+    xs = [F.when(complete, qcol(c).cast("double")) for c in design]
+    k = len(design)
+    aggs = _gelman_aggs(numeric, boolean) + [F.count(xs[0]).alias("__n")]
+    aggs += [F.avg(x).alias(f"__c{i}") for i, x in enumerate(xs)]
+    aggs += [
+        F.covar_pop(xs[i], xs[j]).alias(f"__cov{i}_{j}") for i in range(k) for j in range(i, k)
+    ]
+    row = df.agg(*aggs).first()
+    std = _gelman_apply(df, numeric, boolean, row)
+
+    n = row["__n"]
+    m = [row[f"__mu_{c}"] for c in design]
+    sd = [row[f"__sd_{c}"] if c in numeric else 0.5 for c in design]  # booleans: d = 1
+    if not (n and all(v is not None and math.isfinite(v) for v in m + sd) and min(sd) > 0):
+        return std, run_model(std, y, X)
+    d = [2.0 * v for v in sd]
+    dev = [row[f"__c{i}"] - float(m[i]) for i in range(k)]
+    g = np.zeros((k, k))
+    for i in range(k):
+        for j in range(i, k):
+            g[i, j] = g[j, i] = n * (row[f"__cov{i}_{j}"] + dev[i] * dev[j]) / (d[i] * d[j])
+    return std, _ols(regs, n, g[1:, 1:], g[1:, 0], g[0, 0])
 
 
 def confidence_intervals(

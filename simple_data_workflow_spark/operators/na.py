@@ -15,12 +15,15 @@ Reference parity: ``wrangle_na`` (src/tasks.py:313-473).
 - **mice** chained-equations multiple imputation (:444-473) — implemented
   in ``simple_data_workflow_spark.operators.mice``.
 
-Scale notes: all fill statistics for every column come from ONE
-aggregate pass (single tiny collected row re-injected as literals);
-modes are per-column groupBy top-1 on bounded-cardinality categorical
-columns. NA-pattern discovery is a distinct over a synthesized pattern
-string — bounded by 2^k patterns but practically tiny; a hard cap
-guards pathological inputs.
+Scale notes: ONE aggregate pass finds which columns hold a NULL and
+takes the mean of every float column (a single tiny collected row,
+re-injected as literals). Only columns that hold a NULL are filled, so
+an int, string or bool column without one costs no median or mode pass;
+the medians of int columns that need one share a second aggregate, and
+the modes of all such string/bool columns one grouped pass with a
+per-column top-1. NA-pattern discovery is a distinct over a synthesized
+pattern string — bounded by 2^k patterns but practically tiny; a hard
+cap guards pathological inputs.
 """
 
 from __future__ import annotations
@@ -45,52 +48,54 @@ from pyspark.sql.types import (
 MAX_NA_PATTERNS = 512
 
 
-def _has_na(df: DataFrame, cols: list[str]) -> bool:
-    """Early-return check (reference src/tasks.py:372-379): one agg pass."""
+def _fill_kind(dtype) -> str | None:
+    if isinstance(dtype, (FloatType, DoubleType)):
+        return "mean"
+    if isinstance(dtype, IntegralType):
+        return "median"
+    if isinstance(dtype, (StringType, BooleanType)):
+        return "mode"
+    return None
+
+
+def _null_scan(df: DataFrame, cols: list[str]) -> tuple[list[str], dict]:
+    """One aggregate pass: the columns of ``cols`` that hold a NULL (the
+    reference's early-return check, src/tasks.py:372-379) and the mean of
+    every float column among them — taken before the NULL flags are
+    known, at no extra scan."""
     if not cols:
-        return False
+        return [], {}
+    floats = [
+        f.name for f in df.schema.fields
+        if f.name in cols and _fill_kind(f.dataType) == "mean"
+    ]
     row = df.agg(
-        *[F.max(F.when(qcol(c).isNull(), 1).otherwise(0)).alias(c) for c in cols]
+        *[F.max(qcol(c).isNull()).alias(f"__na_{c}") for c in cols],
+        *[F.avg(qcol(c)).alias(f"__mu_{c}") for c in floats],
     ).first()
-    return any(row[c] == 1 for c in cols)
+    return [c for c in cols if row[f"__na_{c}"]], {c: row[f"__mu_{c}"] for c in floats}
 
 
-def _fill_values(df: DataFrame, cols: list[str]) -> dict[str, object]:
-    """Per-column fill statistic, one aggregate pass for mean/median and one
-    bounded groupBy per categorical/bool column for mode."""
-    by_type: dict[str, str] = {}
-    for f in df.schema.fields:
-        if f.name not in cols:
-            continue
-        if isinstance(f.dataType, (FloatType, DoubleType)):
-            by_type[f.name] = "mean"
-        elif isinstance(f.dataType, IntegralType):
-            by_type[f.name] = "median"
-        elif isinstance(f.dataType, (StringType, BooleanType)):
-            by_type[f.name] = "mode"
-
-    aggs = []
-    for c, kind in by_type.items():
-        if kind == "mean":
-            aggs.append(F.avg(qcol(c)).alias(c))
-        elif kind == "median":
-            # exact median (pandas interpolates the middle pair) — percentile,
-            # not percentile_approx: correctness first, and a single-pass
-            # exact percentile over a numeric column is still fully distributed
-            aggs.append(F.percentile(qcol(c), F.lit(0.5)).alias(c))
-    fills: dict[str, object] = {}
-    if aggs:
-        row = df.agg(*aggs).first()
-        for c, kind in by_type.items():
-            if kind in ("mean", "median"):
-                v = row[c]
-                if kind == "median":
-                    # pandas fillna on Int64 with x.5 keeps the float value;
-                    # match by keeping the double only when non-integral
-                    v = int(v) if v is not None and float(v).is_integer() else v
-                fills[c] = v
-    mode_cols = [c for c, kind in by_type.items() if kind == "mode"]
-    fills.update(_mode_values(df, mode_cols))
+def _fill_values(df: DataFrame, cols: list[str], means: dict) -> dict[str, object]:
+    """Fill statistic per column of ``cols`` (the columns holding a NULL):
+    float → its mean from :func:`_null_scan`, int → exact median (one
+    aggregate for all), string/bool → mode (one grouped pass for all)."""
+    kinds = {
+        f.name: _fill_kind(f.dataType) for f in df.schema.fields if f.name in cols
+    }
+    fills: dict[str, object] = {c: means[c] for c, k in kinds.items() if k == "mean"}
+    medians = [c for c, k in kinds.items() if k == "median"]
+    if medians:
+        # exact median (pandas interpolates the middle pair) — percentile,
+        # not percentile_approx: correctness first, and a single-pass
+        # exact percentile over a numeric column is still fully distributed
+        row = df.agg(*[F.percentile(qcol(c), F.lit(0.5)).alias(c) for c in medians]).first()
+        for c in medians:
+            v = row[c]
+            # pandas fillna on Int64 with x.5 keeps the float value;
+            # match by keeping the double only when non-integral
+            fills[c] = int(v) if v is not None and float(v).is_integer() else v
+    fills.update(_mode_values(df, [c for c, k in kinds.items() if k == "mode"]))
     return fills
 
 
@@ -264,18 +269,21 @@ def wrangle_na(
         from simple_data_workflow_spark.operators.mice import mice_impute
 
         return mice_impute(df, cols=cols, **kwargs)
-    if not _has_na(df, cols):
+    na_cols, means = _null_scan(df, cols)
+    if not na_cols:
         return df
     if strategy == "cc":
         return df.na.drop(subset=cols)
+    # NULL-free columns are left as they are: a fill would not change them
+    fills = _fill_values(df, na_cols, means)
     if strategy == "fi":
-        return df.fillna(_fill_values(df, cols))
+        return df.fillna(fills)
     if strategy == "fii":
         out, _ = na_indicator_columns(df, cols)
-        return out.fillna(_fill_values(out, cols))
+        return out.fillna(fills)
     if strategy == "gm":
         out, ind_names = na_indicator_columns(df, cols)
-        out = out.fillna(_fill_values(out, cols))
+        out = out.fillna(fills)
         feats = [c for c in cols if c in out.columns]
         inter = _gm_interaction_columns(out, feats, ind_names)
         return out.select("*", *inter)

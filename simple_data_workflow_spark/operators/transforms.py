@@ -112,15 +112,10 @@ def transform_data(df: DataFrame, cols: Sequence[str], func: str = "arcsinh") ->
     )
 
 
-def gelman_standardize_data(
-    df: DataFrame, registry: CategoryRegistry | None = None
-) -> DataFrame:
-    """Gelman (2008) standardization (reference src/tasks.py:524-556).
-
-    numeric → (x − mean) / (2 · stddev_samp)   [ddof=1, = Spark stddev_samp]
-    boolean → x − mean(x)  (mean-centered, not rescaled)
-    everything else unchanged.
-    """
+def _gelman_columns(
+    df: DataFrame, registry: CategoryRegistry | None
+) -> tuple[list[str], list[str]]:
+    """(numeric, boolean) columns the Gelman transform rescales/centers."""
     numeric = [
         f.name
         for f in df.schema.fields
@@ -128,16 +123,20 @@ def gelman_standardize_data(
         and not (registry and registry.is_cat(f.name))
     ]
     boolean = [f.name for f in df.schema.fields if isinstance(f.dataType, BooleanType)]
-    if not numeric and not boolean:
-        return df
+    return numeric, boolean
 
+
+def _gelman_aggs(numeric: list[str], boolean: list[str]) -> list:
     aggs = []
     for c in numeric:
         aggs += [F.avg(qcol(c)).alias(f"__mu_{c}"), F.stddev_samp(qcol(c)).alias(f"__sd_{c}")]
     for c in boolean:
         aggs.append(F.avg(qcol(c).cast("double")).alias(f"__mu_{c}"))
-    stats = df.agg(*aggs).first()
+    return aggs
 
+
+def _gelman_apply(df: DataFrame, numeric: list[str], boolean: list[str], stats) -> DataFrame:
+    """The standardized projection, given the :func:`_gelman_aggs` row."""
     out = []
     for field in df.schema.fields:
         c = field.name
@@ -150,3 +149,19 @@ def gelman_standardize_data(
         else:
             out.append(qcol(c))
     return df.select(*out)
+
+
+def gelman_standardize_data(
+    df: DataFrame, registry: CategoryRegistry | None = None
+) -> DataFrame:
+    """Gelman (2008) standardization (reference src/tasks.py:524-556).
+
+    numeric → (x − mean) / (2 · stddev_samp)   [ddof=1, = Spark stddev_samp]
+    boolean → x − mean(x)  (mean-centered, not rescaled)
+    everything else unchanged.
+    """
+    numeric, boolean = _gelman_columns(df, registry)
+    if not numeric and not boolean:
+        return df
+    stats = df.agg(*_gelman_aggs(numeric, boolean)).first()
+    return _gelman_apply(df, numeric, boolean, stats)

@@ -19,7 +19,11 @@ from pyspark.sql import DataFrame, SparkSession
 
 from simple_data_workflow_spark.operators.categorical import CategoryRegistry, encode_data
 from simple_data_workflow_spark.operators.cleaning import clean_data
-from simple_data_workflow_spark.operators.model import OLSResult, confidence_intervals, run_model
+from simple_data_workflow_spark.operators.model import (
+    OLSResult,
+    confidence_intervals,
+    standardize_and_fit,
+)
 from simple_data_workflow_spark.operators.na import wrangle_na
 from simple_data_workflow_spark.operators.strings import sanitize_col_names
 from simple_data_workflow_spark.operators.transforms import (
@@ -98,10 +102,14 @@ def e2e_pipeline(
     )
     result.stages["transform"] = transformed
 
-    standardized = gelman_standardize_data(transformed, registry)
-    result.stages["standardize"] = standardized
-
     if endog_s and exog_s:
-        result.model = run_model(standardized, endog_s, exog_s)
+        # one pass yields the Gelman statistics AND the standardized
+        # normal equations (the transform is affine)
+        standardized, result.model = standardize_and_fit(
+            transformed, registry, endog_s, exog_s
+        )
         result.conf_int = confidence_intervals(spark, result.model)
+    else:
+        standardized = gelman_standardize_data(transformed, registry)
+    result.stages["standardize"] = standardized
     return result

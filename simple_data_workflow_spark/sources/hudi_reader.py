@@ -167,14 +167,16 @@ _LOG_FILE_RE = re.compile(
 )
 
 
-def _root_local(spark: SparkSession, path: str) -> str:
-    """Plain-local path of the table root — ``os`` for scheme-less
-    roots, one py4j round trip otherwise."""
+def _table_root(spark: SparkSession, path: str) -> str:
+    """The table root as its file paths are spelled: the plain local
+    path for local roots (no py4j), otherwise the qualified Hadoop path,
+    which keeps scheme and authority (``s3a://b/t`` stays ``s3a://b/t``)
+    so base and log paths resolve on the table's own filesystem."""
     loc = tablefs.local_root(path)
     if loc is not None:
         return loc
-    jvm, _ = tablefs.hadoop_fs(spark, path)
-    return jvm.org.apache.hadoop.fs.Path(path).toUri().getPath()
+    jvm, fs = tablefs.hadoop_fs(spark, path)
+    return str(fs.makeQualified(jvm.org.apache.hadoop.fs.Path(path)))
 
 
 def _resolve_groups(
@@ -195,7 +197,7 @@ def _resolve_groups(
     if not completed:
         raise ValueError(f"no completed commits in the Hudi timeline at {path}")
 
-    root = _root_local(spark, path)
+    root = _table_root(spark, path)
     staged = tablefs.staged_files(spark, path, skip=lambda d: d == ".hoodie")
 
     # (partition relpath, fileId) -> (instant, full path): latest valid

@@ -41,7 +41,7 @@ from pyspark.sql import functions as F
 
 from simple_data_workflow_spark.sources import tablefs
 from simple_data_workflow_spark.sources.hudi_reader import (
-    _root_local,
+    _table_root,
     hudi_snapshot_files,
     load_table_properties,
 )
@@ -152,11 +152,11 @@ def hudi_write(
 
 def _live_groups(spark: SparkSession, path: str):
     """(partition relpath, fileId) of every live file group."""
-    root_local = _root_local(spark, path)
+    root = _table_root(spark, path)
     for f in hudi_snapshot_files(spark, path):
         name = f.rsplit("/", 1)[1]
         fid = name.split("_", 1)[0]
-        rel = f[len(root_local) + 1 :]
+        rel = f[len(root) + 1 :]
         part = rel.rsplit("/", 1)[0] if "/" in rel else ""
         yield part, fid
 
@@ -341,7 +341,6 @@ def hudi_upsert(
         raise ValueError(f"record key columns not in source: {missing}")
 
     files = hudi_snapshot_files(spark, path)
-    root_local = _root_local(spark, path)
     snap = (
         spark.read.parquet(*files)
         .withColumn("__file", F.col("_metadata.file_path"))
@@ -367,14 +366,15 @@ def hudi_upsert(
 
     replaced: dict[str, set[str]] = {}
     hit_paths = sorted({r["__file"] for r in hit})
-    from simple_data_workflow_spark.sources.delta_reader import _cmp_path
+    from simple_data_workflow_spark.sources.delta_reader import _cmp_path, _strip_scheme
 
+    root = _strip_scheme(_table_root(spark, path))
     for p_ in hit_paths:
         local = _cmp_path(p_)  # scan spelling percent-encodes; the
         # partition/rel derivation below needs the DECODED path
         name = local.rsplit("/", 1)[1]
         fid = name.split("_", 1)[0]
-        rel = local[len(root_local) + 1 :]
+        rel = local[len(root) + 1 :]
         part = rel.rsplit("/", 1)[0] if "/" in rel else ""
         replaced.setdefault(part, set()).add(fid)
     instant = _next_instant(spark, path)
@@ -432,6 +432,18 @@ def _avro_log_schema(fields) -> str:
     )
 
 
+def _executor_root(path: str) -> str:
+    """Local table root for the executor-side ``open()`` writes (MoR log
+    files, compacted bases). Other schemes are refused: those writes
+    would land on each executor's own disk."""
+    root = tablefs.local_root(path)
+    if root is None:
+        raise NotImplementedError(
+            f"Hudi log and compaction writes need a local or mounted table root, got {path!r}"
+        )
+    return root
+
+
 def _mor_context(spark: SparkSession, path: str):
     """(props, keys, groups, logs, next log version per group, local
     table root) for a MERGE_ON_READ table."""
@@ -457,8 +469,7 @@ def _mor_context(spark: SparkSession, path: str):
         f"{part}\x00{fid}": (max((v for v, _p in logs.get((part, fid), [])), default=0) + 1)
         for (part, fid) in groups
     }
-    root_local = _root_local(spark, path)
-    return props, keys, groups, logs, next_version, root_local
+    return props, keys, groups, logs, next_version, _executor_root(path)
 
 
 def _base_keymap(spark: SparkSession, path: str, groups: dict):
@@ -782,7 +793,7 @@ def hudi_compact(spark: SparkSession, path: str) -> str | None:
     logged = {f"{part}\x00{fid}" for (part, fid) in logs}
     if not logged:
         return None
-    root_local = _root_local(spark, path)
+    root_local = _executor_root(path)
     instant = _next_instant(spark, path)
 
     view = _mor_read(spark, path, _provenance=True)
@@ -1054,7 +1065,6 @@ def hudi_clean(
         m = log_re.match(name)
         if m and m.group("binstant") in dead_bases.get((part, m.group("fid")), ()):
             deleted.append(rel)
-    root = tablefs.local_root(path) or path
+    root = _table_root(spark, path)
     deleted = [rel for rel in deleted if tablefs.remove(spark, f"{root}/{rel}")]
-    root_local = _root_local(spark, path)
-    return sorted(f"{root_local}/{rel}" for rel in deleted)
+    return sorted(f"{root}/{rel}" for rel in deleted)

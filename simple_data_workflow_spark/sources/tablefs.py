@@ -107,6 +107,15 @@ def exists(spark, path: str) -> bool:
     return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
 
 
+def size(spark, path: str) -> int:
+    """Length in bytes of the file at ``path``; raises when it is absent."""
+    loc = local_root(path)
+    if loc is not None:
+        return os.path.getsize(loc)
+    jvm, fs = hadoop_fs(spark, path)
+    return int(fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(path)).getLen())
+
+
 def list_dir(spark, dirpath: str) -> list[str] | None:
     """Entry names (not paths) in ``dirpath``; None when it is absent."""
     loc = local_root(dirpath)

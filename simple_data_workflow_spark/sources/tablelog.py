@@ -3250,12 +3250,7 @@ def table_compact(
     conflict rather than being silently dropped. Returns the new
     version."""
     state = _resolve_state(spark, path, None)
-    jvm, fs = tablefs.hadoop_fs(spark, path)
-    total = 0
-    for f in state["files"]:
-        total += fs.getFileStatus(
-            jvm.org.apache.hadoop.fs.Path(_data_path(path, f))
-        ).getLen()
+    total = sum(tablefs.size(spark, _data_path(path, f)) for f in state["files"])
     n_files = num_files or max(1, round(total / (target_file_mb * 1024 * 1024)))
     snapshot = _read_files(
         spark, path, state["files"], state["schema"], dvs=state.get("dvs"),
@@ -3314,13 +3309,10 @@ def table_compact_small(
     files stay membership-prunable. Returns the new version (current
     one if fewer than two small files exist — nothing to pack)."""
     state = _resolve_state(spark, path, None)
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     threshold = small_file_mb * 1024 * 1024
     small, small_bytes = [], 0
     for f in state["files"]:
-        sz = fs.getFileStatus(
-            jvm.org.apache.hadoop.fs.Path(_data_path(path, f))
-        ).getLen()
+        sz = tablefs.size(spark, _data_path(path, f))
         if sz < threshold:
             small.append(f)
             small_bytes += sz
@@ -4089,23 +4081,18 @@ def table_files_df(
     the snapshot — name, on-disk bytes, row count, merge-on-read
     deleted-row count, the commit that added it, and its recorded
     partition-value sets. Everything but ``size_bytes`` comes from the
-    log alone; sizes are one driver-side ``getFileStatus`` per file
+    log alone; sizes are one driver-side ``tablefs.size`` per file
     (bounded by the snapshot's file count — the same budget every
     pruning decision already spends). This is the operability surface
     maintenance decisions read: small-file ratios for compaction,
     DV density for purge scheduling, per-commit data distribution."""
     state = _resolve_state(spark, path, version)
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     rows = []
     for f in state["files"]:
         st = state["stats"].get(f, {})
         parts = st.get("__parts")
         try:
-            size = int(
-                fs.getFileStatus(
-                    jvm.org.apache.hadoop.fs.Path(_data_path(path, f))
-                ).getLen()
-            )
+            size = tablefs.size(spark, _data_path(path, f))
         except Exception:
             size = None  # referenced file on a dead mount: surface, don't die
         rows.append(
@@ -4292,18 +4279,13 @@ def table_verify(
     Returns ``{"ok": bool, "issues": [str, ...], "checked_files": n}``
     — issues name the broken invariant and the offending object, so
     the finding is actionable. Metadata-only by default: cost ∝ log
-    size + one ``getFileStatus`` per referenced file, independent of
+    size + one existence check per referenced file, independent of
     table bytes — runnable as a scheduled job against a 100 TB table."""
     issues: list[str] = []
     entries, cps = _list_log(spark, path)
     if not entries and not cps:
         return {"ok": False, "issues": [f"no table log under {path}"],
                 "checked_files": 0}
-    jvm, fs = tablefs.hadoop_fs(spark, path)
-
-    def _exists(ref: str) -> bool:
-        return fs.exists(jvm.org.apache.hadoop.fs.Path(_data_path(path, ref)))
-
     referenced: set[str] = set()
     for v in entries:
         try:
@@ -4317,7 +4299,9 @@ def table_verify(
             referenced.update(cp.get("dvs", []))
         except Exception as exc:
             issues.append(f"checkpoint {c} unreadable: {exc}")
-    missing = sorted(r for r in referenced if not _exists(r))
+    missing = sorted(
+        r for r in referenced if not tablefs.exists(spark, _data_path(path, r))
+    )
     issues.extend(
         f"referenced file missing on disk: {m}" for m in missing[:20]
     )
@@ -4341,28 +4325,17 @@ def table_verify(
             continue  # rewritten file's dead DV weight: harmless, documented
     # clone markers: corrupt/unparseable markers would drop files from
     # vacuum's keep-set silently
-    marker_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/_clones")
-    if fs.exists(marker_dir):
-        for st in fs.listStatus(marker_dir):
-            mname = st.getPath().getName()
-            if not mname.endswith(".json"):
-                continue
-            try:
-                stream = fs.open(st.getPath())
-                try:
-                    marker = json.loads(
-                        bytes(
-                            jvm.org.apache.commons.io.IOUtils.toByteArray(
-                                stream
-                            )
-                        ).decode("utf-8")
-                    )
-                finally:
-                    stream.close()
-                if "dst" not in marker:
-                    raise KeyError("dst")
-            except Exception as exc:
-                issues.append(f"clone marker {mname} unreadable: {exc}")
+    for mname in sorted(tablefs.list_dir(spark, f"{path}/_clones") or []):
+        if not mname.endswith(".json"):
+            continue
+        try:
+            marker = json.loads(
+                tablefs.read_file(spark, f"{path}/_clones/{mname}").decode("utf-8")
+            )
+            if "dst" not in marker:
+                raise KeyError("dst")
+        except Exception as exc:
+            issues.append(f"clone marker {mname} unreadable: {exc}")
     if check_rows:
         meta_rows = table_row_count(spark, path)
         phys_rows = table_read(spark, path).count()

@@ -1092,3 +1092,33 @@ def test_hudi_incremental_empty_range(spark, tmp_path):
     assert set(empty.columns) == set(full.columns)
     with _pytest.raises(ValueError, match="past the newest"):
         hudi_table_changes(spark, root, start_instant=str(int(latest) + 10))
+
+
+def test_non_local_root_keeps_scheme_and_authority(spark, monkeypatch):
+    """An ``s3a://`` table resolves its base and log files under the
+    qualified root, not under the bare URI path on the default
+    filesystem; the executor-side log writers refuse such a root."""
+    from simple_data_workflow_spark.sources import hudi_reader, hudi_writer, tablefs
+
+    class QualifyingFs:
+        def makeQualified(self, p):
+            return p
+
+    root = "s3a://bucket/warehouse/t"
+    t = "20240101000000"
+    monkeypatch.setattr(tablefs, "hadoop_fs", lambda s, p: (spark._jvm, QualifyingFs()))
+    monkeypatch.setattr(hudi_reader, "_timeline", lambda s, p: ({t}, set()))
+    monkeypatch.setattr(
+        tablefs,
+        "staged_files",
+        lambda s, p, skip=None: [
+            (f"p=1/fid-1_0-1-0_{t}.parquet", 10, 0),
+            (f"p=1/.fid-1_{t}.log.1_0-1-0", 5, 0),
+        ],
+    )
+    assert hudi_reader._table_root(spark, root) == root
+    groups, logs, _c, _r = hudi_reader._resolve_groups(spark, root)
+    assert groups == {("p=1", "fid-1"): (t, f"{root}/p=1/fid-1_0-1-0_{t}.parquet")}
+    assert logs == {("p=1", "fid-1"): [(1, f"{root}/p=1/.fid-1_{t}.log.1_0-1-0")]}
+    with pytest.raises(NotImplementedError):
+        hudi_writer._executor_root(root)

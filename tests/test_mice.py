@@ -173,3 +173,83 @@ def test_mice_pmm_draws_observed_values(na_frame):
     # PMM property: every imputed cell is an actually-observed value
     assert set(imputed.x.round(9)) <= observed_x
     assert imputed.x.notna().all()
+
+
+# Output fingerprints of mice_impute(n_burnin=2, n_imputations=2,
+# n_spread=1, seed=7) on the seeded frame below, captured from the
+# implementation with eager per-sweep checkpoints that mode-filled every
+# non-numeric column: row count, per imputed column the sum of
+# (row_id + 1)(iter + 1)·value, the same weights summed over rows where
+# g == "b", the count of NULL g, and the (row_id + 1) sum where flag is
+# set. Without a row_id the ids come from monotonically_increasing_id
+# over the frame's 4 input partitions.
+MICE_GOLDEN = {
+    ("normal", "rid"): (480, 429546.3262880393, 645542.6836540058, -543.419220217957, 19122, 29040),
+    ("normal", None): (
+        480, 45949669279921.836, 68400899568366.72, -4253467293.900047, 2061584306802, 3092376460560,
+    ),
+    ("pmm", "rid"): (480, 428354.8862881301, 644144.0515268112, 2238.085503671868, 19122, 29040),
+    ("pmm", None): (
+        480, 45628783175742.62, 68543005251157.89, 59910283076.07048, 2061584306802, 3092376460560,
+    ),
+}
+
+
+def _golden_frame(spark):
+    rng = np.random.default_rng(2024)
+    n = 240
+    x = rng.normal(5, 2, n)
+    z = rng.normal(0, 1, n)
+    y = 1.5 * x - z + rng.normal(0, 0.5, n)
+    rows = [
+        (
+            i,
+            None if rng.random() < 0.15 else float(x[i]),
+            None if rng.random() < 0.10 else float(y[i]),
+            None if rng.random() < 0.20 else float(z[i]),
+            None if i % 9 == 0 else ("a" if i % 3 else "b"),
+            bool(i % 2),
+        )
+        for i in range(n)
+    ]
+    return spark.createDataFrame(
+        rows, "rid long, x double, y double, z double, g string, flag boolean"
+    )
+
+
+@pytest.mark.parametrize("draw, row_id", sorted(MICE_GOLDEN, key=str))
+def test_mice_output_matches_golden(spark, draw, row_id):
+    import math
+
+    from simple_data_workflow_spark.operators.mice import mice_impute
+
+    df = _golden_frame(spark)
+    src = df if row_id else df.drop("rid")
+    got = mice_impute(
+        src, n_burnin=2, n_imputations=2, n_spread=1, row_id=row_id, draw=draw, seed=7
+    ).collect()
+    w = [(r["row_id"] + 1) * (r["iter"] + 1) for r in got]
+    n, sx, sy, sz, g_b, flag = MICE_GOLDEN[(draw, row_id)]
+    assert len(got) == n
+    # float sums: tolerance for last-bit differences of JVM math across CPUs
+    for col, want in (("x", sx), ("y", sy), ("z", sz)):
+        assert math.fsum(wi * r[col] for wi, r in zip(w, got)) == pytest.approx(want, rel=1e-9)
+    assert sum(wi for wi, r in zip(w, got) if r["g"] == "b") == g_b
+    assert not [r for r in got if r["g"] is None]
+    assert sum(r["row_id"] + 1 for r in got if r["flag"]) == flag
+
+
+def test_mice_small_run_job_count(lineitem_6k, count_jobs):
+    """2 numeric targets x 3 sweeps x one fit aggregate (map stage +
+    result) plus the start aggregate; the lazy checkpoints add none."""
+    from simple_data_workflow_spark.operators.mice import mice_impute
+
+    src = lineitem_6k.select("l_rowid", "l_quantity", "l_discount")
+    out, n_jobs = count_jobs(
+        lambda: mice_impute(
+            src, cols=["l_quantity", "l_discount"], n_burnin=2, n_imputations=2,
+            n_spread=1, row_id="l_rowid",
+        )
+    )
+    assert n_jobs <= 14
+    assert out.count() == 2 * 6_000

@@ -86,3 +86,52 @@ def test_fit_per_group_matches_numpy(spark):
         assert out[g]["n_rows"] == 50
     # NaN crosses the Arrow boundary as NULL
     assert out["tiny"]["slope"] is None and out["tiny"]["n_rows"] == 1
+
+
+def _design_frame(spark, n=400):
+    """NULLs in a regressor, a boolean regressor and a column whose mean
+    is 1e6 times its spread (raw cross-products would cancel badly)."""
+    rng = np.random.default_rng(11)
+    big = 1e6 + rng.normal(0, 1, n)
+    x = rng.normal(3, 2, n)
+    flag = rng.random(n) < 0.3
+    code = rng.integers(0, 3, n)
+    y = 0.5 * x - 2.0 * (big - 1e6) + flag + rng.normal(0, 0.1, n)
+    rows = [
+        (None if i % 13 == 0 else float(x[i]), float(big[i]), bool(flag[i]), int(code[i]), float(y[i]))
+        for i in range(n)
+    ]
+    return spark.createDataFrame(rows, "x double, big double, flag boolean, code int, y double")
+
+
+@pytest.mark.parametrize(
+    "X, cat",
+    [
+        (["x", "big", "flag"], None),  # affine moments
+        (["x", "code"], "code"),  # a regressor the transform leaves as is
+    ],
+)
+def test_standardize_and_fit_matches_run_model(spark, X, cat):
+    from simple_data_workflow_spark.operators.categorical import CategoryRegistry
+    from simple_data_workflow_spark.operators.model import standardize_and_fit
+    from simple_data_workflow_spark.operators.transforms import gelman_standardize_data
+
+    df = _design_frame(spark)
+    registry = CategoryRegistry()
+    if cat:
+        registry.add(cat, [0, 1, 2], ordered=True)
+    std, res = standardize_and_fit(df, registry, "y", X)
+    want_std = gelman_standardize_data(df, registry)
+    want = run_model(want_std, "y", X)
+    assert sorted(std.collect(), key=repr) == sorted(want_std.collect(), key=repr)
+    assert res.regressors == want.regressors
+    assert res.params == pytest.approx(want.params, rel=1e-9)
+    assert res.bse == pytest.approx(want.bse, rel=1e-9)
+    assert (res.nobs, res.df_resid) == (want.nobs, want.df_resid) == (369, 369 - len(X))
+
+
+def test_standardize_and_fit_without_matching_regressor(spark):
+    from simple_data_workflow_spark.operators.model import standardize_and_fit
+
+    with pytest.raises(ValueError, match="no regressors match"):
+        standardize_and_fit(_design_frame(spark), None, "y", ["nope"])

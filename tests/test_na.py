@@ -131,3 +131,56 @@ def test_no_na_early_return(spark):
     df = spark.createDataFrame([(1, 1.0)], ["a", "b"])
     out = wrangle_na(df, strategy="fi")
     assert out.collect() == df.collect()
+
+
+NULL_FREE_ROWS = [
+    (0, 1.5, 10, 7, "a", True),
+    (1, None, 20, 3, "b", False),
+    (2, 2.5, None, 3, "a", True),
+    (3, 4.0, 40, 9, "c", True),
+    (4, None, 50, 1, "b", False),
+    (5, 3.0, None, 2, "a", False),
+]
+
+# sha256 of repr(sorted rows) of each strategy's output, captured from
+# the implementation that took a median/mode of every int/string/bool
+# column, NULL-free ones included
+NULL_FREE_SHA = {
+    "fii": "7a9ecd392009392337fa1be773963c371f6f8e88363e073e8a683dea2f940aab",
+    "gm": "633aa3e5f9cc7be4f06868447ef0f5aa61405ca6439bc014a5569f4563bd9e73",
+}
+
+
+@pytest.mark.parametrize("strategy", ["fi", "fii", "gm"])
+def test_null_free_columns_are_left_as_they_are(spark, strategy):
+    """Only the float and long columns hold NULLs: the int, string and
+    bool columns need no statistic, and the output is unchanged."""
+    import hashlib
+
+    df = spark.createDataFrame(
+        NULL_FREE_ROWS, "row_id long, f double, n long, i int, s string, b boolean"
+    )
+    out = wrangle_na(df, strategy=strategy, cols=["f", "n", "i", "s", "b"])
+    got = sorted(tuple(r) for r in out.collect())
+    assert out.columns[:6] == ["row_id", "f", "n", "i", "s", "b"]
+    assert [t for _, t in out.dtypes][:6] == ["bigint", "double", "bigint", "int", "string", "boolean"]
+    if strategy == "fi":
+        assert got == [
+            (0, 1.5, 10, 7, "a", True),
+            (1, 2.75, 20, 3, "b", False),
+            (2, 2.5, 30, 3, "a", True),
+            (3, 4.0, 40, 9, "c", True),
+            (4, 2.75, 50, 1, "b", False),
+            (5, 3.0, 30, 2, "a", False),
+        ]
+    else:
+        assert len(out.columns) == {"fii": 8, "gm": 29}[strategy]
+        assert hashlib.sha256(repr(got).encode()).hexdigest() == NULL_FREE_SHA[strategy]
+
+
+def test_fi_with_float_nulls_only_runs_one_aggregate(lineitem_6k, count_jobs):
+    """NULL flags and float means share one aggregate (map stage +
+    result job); the NULL-free long and string columns need no pass."""
+    out, n_jobs = count_jobs(lambda: wrangle_na(lineitem_6k, strategy="fi"))
+    assert n_jobs <= 2
+    assert out.where("l_quantity IS NULL OR l_discount IS NULL").count() == 0

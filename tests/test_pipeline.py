@@ -1,5 +1,6 @@
 """End-to-end pipeline (reference src/flow.py e2e_pipeline parity)."""
 
+import numpy as np
 import pytest
 
 from simple_data_workflow_spark.plans import e2e_pipeline
@@ -88,3 +89,39 @@ def test_entry_contract(spark):
     rows = out.collect()
     assert len(rows) > 0
     assert set(em.oracle_sql()) <= set(em.queries())
+
+
+def _stats_flow(spark, df):
+    return e2e_pipeline(
+        spark,
+        df=df,
+        na_strategy="fi",
+        cat_cols=["l_returnflag", "l_linestatus"],
+        transform_cols=["l_extendedprice", "l_quantity"],
+        transform_func="arcsinh",
+        endog="l_extendedprice",
+        exog=["l_quantity", "l_discount", "l_tax"],
+    )
+
+
+def test_e2e_fi_runs_at_most_six_jobs(spark, lineitem_6k, count_jobs):
+    """clean (dummy test + levels), fill (NULL flags + means) and the
+    standardize/OLS moments are one aggregate each: 3 x (map stage +
+    result) jobs."""
+    res, n_jobs = count_jobs(lambda: _stats_flow(spark, lineitem_6k.drop("l_rowid")))
+    assert n_jobs <= 6
+    assert res.model.regressors == ["l_quantity", "l_discount", "l_tax"]
+
+
+def test_e2e_fused_fit_matches_two_pass(spark, lineitem_6k):
+    from simple_data_workflow_spark.operators.model import run_model
+    from simple_data_workflow_spark.operators.transforms import gelman_standardize_data
+
+    res = _stats_flow(spark, lineitem_6k.drop("l_rowid"))
+    std = gelman_standardize_data(res["transform"], res.registry)
+    want = run_model(std, "l_extendedprice", ["l_quantity", "l_discount", "l_tax"])
+    assert sorted(res["standardize"].collect()) == sorted(std.collect())
+    assert res["standardize"].schema == std.schema
+    np.testing.assert_allclose(res.model.params, want.params, rtol=1e-9)
+    np.testing.assert_allclose(res.model.bse, want.bse, rtol=1e-9)
+    assert (res.model.nobs, res.model.df_resid) == (want.nobs, want.df_resid)

@@ -307,3 +307,49 @@ def test_delta_vacuum_keeps_live_absolute_adds(
     assert delta_vacuum(spark, t, retention_hours=0) == [f"{t}/stray.parquet"]
     assert all(p.exists() for p in live)
     assert _rows(delta_read(spark, t)) == _want(range(40))
+
+
+def test_tablelog_file_sizing_and_verify(spark, tmp_path, route, monkeypatch):
+    """``table_files_df``, ``table_verify`` and both compactions size and
+    probe data files through ``tablefs``: on the local route without a
+    single Hadoop filesystem call, and a missing file or a corrupt clone
+    marker is reported on both routes."""
+    from simple_data_workflow_spark.sources.tablelog import (
+        table_commit,
+        table_compact,
+        table_compact_small,
+        table_files_df,
+        table_read,
+        table_verify,
+    )
+
+    t = str(tmp_path / "t")
+    table_commit(_df(spark), t)
+    table_commit(_df(spark, 40, 50), t)
+    if route == "local":
+
+        def no_hadoop(*a, **k):
+            raise AssertionError("py4j FileSystem call on a local table")
+
+        monkeypatch.setattr(tablefs, "hadoop_fs", no_hadoop)
+    files = table_files_df(spark, t).collect()
+    assert {r["size_bytes"] for r in files} == {
+        os.path.getsize(f"{t}/data/{r['file']}") for r in files
+    }
+    assert table_verify(spark, t)["ok"]
+    monkeypatch.undo()
+    if route == "hadoop":
+        monkeypatch.setattr(tablefs, "local_root", lambda p: None)
+    table_compact_small(spark, t)
+    table_compact(spark, t, num_files=1)
+    assert _rows(table_read(spark, t)) == _want(range(50))
+
+    live = table_files_df(spark, t).collect()
+    os.remove(f"{t}/data/{live[0]['file']}")
+    os.makedirs(f"{t}/_clones", exist_ok=True)
+    with open(f"{t}/_clones/bad.json", "w") as f:
+        f.write("{not json")
+    audit = table_verify(spark, t)
+    assert not audit["ok"]
+    assert any(live[0]["file"] in i and "missing" in i for i in audit["issues"])
+    assert any("clone marker bad.json unreadable" in i for i in audit["issues"])
