@@ -77,6 +77,16 @@ def _strip_scheme(p: str) -> str:
     return p
 
 
+def _full_path(root: str, rel: str) -> str:
+    """A log's ``add``/``remove``/``cdc`` path (URI-encoded) as a file
+    path: absolute ones (``/x``, ``file:/x``, ``s3a://b/x``) as they
+    are, relative ones under ``root``."""
+    dec = urllib.parse.unquote(rel)
+    if dec.startswith(("/", "file:")) or "://" in dec:
+        return dec
+    return f"{root}/{dec}"
+
+
 def _cmp_path(p: str) -> str:
     """SCAN-side path → the on-disk literal spelling.
     ``_metadata.file_path`` reports Hadoop's URI raw path: the disk
@@ -484,8 +494,7 @@ def _delta_stats_map(
 
     by_full = {}
     for rel, a in adds.items():
-        dec = urllib.parse.unquote(rel)
-        full = dec if "://" in dec or dec.startswith("/") else f"{path}/{dec}"
+        full = _full_path(path, rel)
         per_col: dict = {}
         st = a.get("stats")
         if st:
@@ -653,15 +662,12 @@ def delta_version_at_timestamp(spark: SparkSession, path: str, ts_ms: int) -> in
     the ``commitInfo.timestamp`` when present, else the log file's
     modification time (Delta's own fallback). Raises if the table has
     no commit at or before the asked instant."""
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     commits, _cps = _list_log(spark, path)
     best = None
     for v in commits:
-        p = jvm.org.apache.hadoop.fs.Path(
-            f"{path}/_delta_log/{v:020d}.json"
-        )
-        t = int(fs.getFileStatus(p).getModificationTime())
-        raw = tablefs.read_file(spark, str(p.toUri().getPath())).decode("utf-8")
+        p = f"{path}/_delta_log/{v:020d}.json"
+        t = tablefs.stat(spark, p)[1]
+        raw = tablefs.read_file(spark, p).decode("utf-8")
         for line in raw.splitlines():
             if not line.strip():
                 continue
@@ -789,10 +795,6 @@ def delta_table_changes(
                 "spark.sql.optimizer.nestedSchemaPruning.enabled", "false"
             )
 
-    def _full(rel: str) -> str:
-        dec = urllib.parse.unquote(rel)
-        return dec if "://" in dec or dec.startswith("/") else f"{path}/{dec}"
-
     cdf_on = (
         str(
             (meta.get("configuration") or {}).get(
@@ -821,7 +823,12 @@ def delta_table_changes(
         if cdcs:
             for c in cdcs:
                 cdc_files.append(
-                    (_full(c["path"]), v, ts, c.get("partitionValues") or {})
+                    (
+                        _full_path(path, c["path"]),
+                        v,
+                        ts,
+                        c.get("partitionValues") or {},
+                    )
                 )
             continue
         removes = [
@@ -873,11 +880,16 @@ def delta_table_changes(
                     dv_pos = read_dv_positions(
                         lambda p: tablefs.read_file(spark, p), path, desc
                     )
-                group.append((_full(rel), pv, dv_pos))
+                group.append((_full_path(path, rel), pv, dv_pos))
             rem_groups[v] = group
         for a in adds:
             ins_files.append(
-                (_full(a["path"]), v, ts, a.get("partitionValues") or {})
+                (
+                    _full_path(path, a["path"]),
+                    v,
+                    ts,
+                    a.get("partitionValues") or {},
+                )
             )
 
     out_fields = (

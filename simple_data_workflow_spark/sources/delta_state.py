@@ -319,7 +319,9 @@ def _checkpoint_state(spark, parts: list[str]):
                 sc = sc.filter(pc.is_valid(sc))
                 sidecars = [s["path"] for s in sc.to_pylist()]
         paths = [
-            s if "://" in s or s.startswith("/") else f"{log_dir}/_sidecars/{s}"
+            s
+            if "://" in s or s.startswith(("/", "file:"))
+            else f"{log_dir}/_sidecars/{s}"
             for s in sidecars
         ]
         if paths:
@@ -493,7 +495,8 @@ class DeltaSnapshot:
         if not len(paths):
             return paths
         is_abs = pc.or_(
-            pc.match_substring(paths, "://"), pc.starts_with(paths, "/")
+            pc.or_(pc.match_substring(paths, "://"), pc.starts_with(paths, "/")),
+            pc.starts_with(paths, "file:"),
         )
         rooted = pc.binary_join_element_wise(
             pa.scalar(self.root, pa.string()), paths, "/"

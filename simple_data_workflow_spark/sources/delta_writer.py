@@ -49,8 +49,10 @@ from pyspark.sql.types import StructType
 from simple_data_workflow_spark.sources import tablefs
 
 from simple_data_workflow_spark.sources.delta_reader import (
+    _full_path,
     _list_log,
     _NULL_PARTITION,
+    _strip_scheme,
 )
 
 
@@ -243,6 +245,15 @@ def _publish_if_absent(spark, path: str, name: str, body: str) -> bool:
     return tablefs.publish_if_absent(
         spark, f"{path}/_delta_log", name, body.encode("utf-8")
     )
+
+
+def _remove_orphans(spark, path: str, actions, full_paths=()) -> None:
+    """Delete what a commit that lost its race staged and never
+    referenced: the files of its add/cdc ``actions`` (paths relative to
+    ``path``, URL-encoded) and the ``full_paths`` (DV sidecars)."""
+    rels = (urllib.parse.unquote(a["path"]) for a in actions)
+    for p in [*full_paths, *(f"{path}/{rel}" for rel in rels)]:
+        tablefs.remove(spark, p)
 
 
 def _replay_full(spark, path: str, version: int | None = None):
@@ -654,10 +665,7 @@ def delta_write(
             # tree but never referenced — clean them up before raising,
             # or retried overwrites accumulate orphans a vacuum of this
             # log can't see
-            jvm, fs = tablefs.hadoop_fs(spark, path)
-            for a in adds:
-                dec = urllib.parse.unquote(a["path"])
-                fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{dec}"), False)
+            _remove_orphans(spark, path, adds)
             raise DeltaConcurrentWrite(
                 f"version {version} of {path} was committed by another "
                 "writer; re-run the overwrite against the new snapshot"
@@ -745,8 +753,9 @@ def delta_checkpoint(
     noted per PROTOCOL.md which keeps tombstones for VACUUM
     bookkeeping only). Feature-carrying protocols (readerFeatures /
     writerFeatures) persist verbatim — dropping them would make a
-    DV/column-mapped table unreadable after log cleanup. Local
-    filesystem paths (metadata-sized, driver-side pyarrow)."""
+    DV/column-mapped table unreadable after log cleanup. The files are
+    metadata-sized: pyarrow builds them driver-side and ``tablefs``
+    writes them onto the table's own filesystem."""
     import pyarrow as pa
     import pyarrow.parquet as pq
 
@@ -988,31 +997,32 @@ def delta_checkpoint(
         }
         return pa.table(cols, schema=pa.schema([fields[nm] for nm in names]))
 
-    jvm, _ = tablefs.hadoop_fs(spark, path)
-    local = jvm.org.apache.hadoop.fs.Path(path).toUri().getPath()
+    def parquet_bytes(t) -> bytes:
+        buf = pa.BufferOutputStream()
+        pq.write_table(t, buf)
+        return buf.getvalue().to_pybytes()
+
+    log = f"{path}/_delta_log"
     now = int(time.time() * 1000)
     if format == "classic":
         names4 = ["add", "metaData", "protocol", "txn", "domainMetadata"]
         t = pa.concat_tables([table(head_rows, names4), adds_table(names4)])
-        pq.write_table(
-            t, f"{local}/_delta_log/{version:020d}.checkpoint.parquet"
+        tablefs.write_file(
+            spark, f"{log}/{version:020d}.checkpoint.parquet", parquet_bytes(t)
         )
         n_actions = t.num_rows
     else:
-        import os as _os
-
-        _os.makedirs(f"{local}/_delta_log/_sidecars", exist_ok=True)
         sc_name = f"{uuid.uuid4()}.parquet"
-        sc_path = f"{local}/_delta_log/_sidecars/{sc_name}"
         side = adds_table(["add"])
-        pq.write_table(side, sc_path)
+        sc_bytes = parquet_bytes(side)
+        tablefs.write_file(spark, f"{log}/_sidecars/{sc_name}", sc_bytes)
         manifest_rows = [
             row(cm={"version": version, "tags": []}),
             *head_rows,
             row(
                 sc={
                     "path": sc_name,
-                    "sizeInBytes": _os.path.getsize(sc_path),
+                    "sizeInBytes": len(sc_bytes),
                     "modificationTime": now,
                 }
             ),
@@ -1028,13 +1038,17 @@ def delta_checkpoint(
                 "domainMetadata",
             ],
         )
-        pq.write_table(
-            t,
-            f"{local}/_delta_log/{version:020d}.checkpoint.{uuid.uuid4()}.parquet",
+        tablefs.write_file(
+            spark,
+            f"{log}/{version:020d}.checkpoint.{uuid.uuid4()}.parquet",
+            parquet_bytes(t),
         )
         n_actions = len(manifest_rows) + side.num_rows
-    with open(f"{local}/_delta_log/_last_checkpoint", "w") as f:
-        json.dump({"version": version, "size": n_actions}, f)
+    tablefs.write_file(
+        spark,
+        f"{log}/_last_checkpoint",
+        json.dumps({"version": version, "size": n_actions}).encode(),
+    )
     return version
 
 
@@ -1889,8 +1903,9 @@ def delta_clone(
     except FileNotFoundError:
         pass
 
-    jvm, _fs_ = tablefs.hadoop_fs(spark, src_path)
-    src_local = jvm.org.apache.hadoop.fs.Path(src_path).toUri().getPath()
+    # adds are absolute under the source root: scheme and authority
+    # kept on other filesystems, a plain path (no ``file:``) locally
+    src_root = tablefs.qualified_root(spark, src_path)
     now = int(time.time() * 1000)
     lines = [
         json.dumps(
@@ -1916,12 +1931,7 @@ def delta_clone(
     lines.append(json.dumps({"metaData": meta_out}))
     for rel in sorted(adds):
         a = dict(adds[rel])
-        dec = urllib.parse.unquote(rel)
-        full = (
-            dec
-            if "://" in dec or dec.startswith("/")
-            else f"{src_local}/{dec}"
-        )
+        full = _full_path(src_root, rel)
         if "://" in full:
             # scheme'd absolute URI (cross-store source, clone-of-clone):
             # percent-encode ONLY the path component — quoting the whole
@@ -1929,6 +1939,8 @@ def delta_clone(
             head, _, tail = full.partition("://")
             netloc, slash, rest = tail.partition("/")
             a["path"] = f"{head}://{netloc}{slash}{urllib.parse.quote(rest)}"
+        elif full.startswith("file:"):
+            a["path"] = f"file:{urllib.parse.quote(full[5:])}"
         else:
             a["path"] = urllib.parse.quote(full)
         a["dataChange"] = True
@@ -1939,7 +1951,7 @@ def delta_clone(
                 **dv,
                 "storageType": "p",
                 "pathOrInlineDv": dv_uuid_path(
-                    src_local, dv["pathOrInlineDv"]
+                    src_root, dv["pathOrInlineDv"]
                 ),
             }
         lines.append(json.dumps({"add": a}))
@@ -2072,13 +2084,7 @@ def _dml_rewrite(
         now = int(time.time() * 1000)
         rel_by_full = {}
         for rel in adds_now:
-            dec = urllib.parse.unquote(rel)
-            full = (
-                dec
-                if "://" in dec or dec.startswith("/")
-                else f"{path}/{dec}"
-            )
-            rel_by_full[full] = rel
+            rel_by_full[_full_path(path, rel)] = rel
         lines = [
             json.dumps(
                 {
@@ -2115,13 +2121,7 @@ def _dml_rewrite(
             return version
         # lost the race: the snapshot moved under us — the staged files
         # are orphans (never referenced); re-resolve and redo the DML
-        jvm, fs = tablefs.hadoop_fs(spark, path)
-        for a in staged:
-            dec = urllib.parse.unquote(a["path"])
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{dec}"), False)
-        for c in cdc_actions:
-            dec = urllib.parse.unquote(c["path"])
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{dec}"), False)
+        _remove_orphans(spark, path, [*staged, *cdc_actions])
     raise DeltaConcurrentWrite(
         f"{operation} on {path} lost the commit race {_retries} times"
     )
@@ -2253,7 +2253,6 @@ def _dv_dml(
                     spark, path, view, cdf, operation
                 )
 
-        jvm, fs = tablefs.hadoop_fs(spark, path)
         from pyspark.sql import functions as F
 
         sidecars: list[str] = []
@@ -2390,11 +2389,7 @@ def _dv_dml(
                 fbytes, spans = dv_file_bytes(blobs)
                 z_shared = z85_encode(uuid.uuid4().bytes)
                 sc_path = dv_uuid_path(path, z_shared)
-                out = fs.create(jvm.org.apache.hadoop.fs.Path(sc_path), False)
-                try:
-                    out.write(fbytes)
-                finally:
-                    out.close()
+                tablefs.write_file(spark, sc_path, fbytes)
                 sidecars.append(sc_path)
                 for f, span in zip(order, spans):
                     dv_descs[f] = {
@@ -2407,11 +2402,7 @@ def _dv_dml(
 
         rel_by_full = {}
         for rel in view["adds_now"]:
-            dec = urllib.parse.unquote(rel)
-            full = (
-                dec if "://" in dec or dec.startswith("/") else f"{path}/{dec}"
-            )
-            rel_by_full[full] = rel
+            rel_by_full[_full_path(path, rel)] = rel
         now = int(time.time() * 1000)
         lines = [
             json.dumps(
@@ -2484,14 +2475,7 @@ def _dv_dml(
             return version
         # lost the race: the sidecars and staged files are unreferenced
         # orphans — remove them and redo against the new snapshot
-        for sc_p in sidecars:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(sc_p), False)
-        for a in staged:
-            dec = urllib.parse.unquote(a["path"])
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{dec}"), False)
-        for c in cdc_actions:
-            dec = urllib.parse.unquote(c["path"])
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{dec}"), False)
+        _remove_orphans(spark, path, [*staged, *cdc_actions], sidecars)
     raise DeltaConcurrentWrite(
         f"{operation} on {path} lost the commit race {_retries} times"
     )
@@ -2783,9 +2767,7 @@ def _probe_wants_dv(view: dict, probe: list, path: str) -> bool:
         return False
     rel_by_full = {}
     for rel in view["adds_now"]:
-        dec = urllib.parse.unquote(rel)
-        full = dec if "://" in dec or dec.startswith("/") else f"{path}/{dec}"
-        rel_by_full[_strip(full)] = rel
+        rel_by_full[_strip(_full_path(path, rel))] = rel
     total = 0
     known = True
     for r in probe:
@@ -3430,10 +3412,7 @@ def delta_optimize(
             spark, path, f"{version:020d}.json", "\n".join(lines) + "\n"
         ):
             return version
-        jvm, fs = tablefs.hadoop_fs(spark, path)
-        for a in staged_all:
-            dec = urllib.parse.unquote(a["path"])
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/{dec}"), False)
+        _remove_orphans(spark, path, staged_all)
     raise DeltaConcurrentWrite(
         f"OPTIMIZE on {path} lost the commit race {_retries} times"
     )
@@ -3449,7 +3428,6 @@ def delta_vacuum(
     like Delta. Returns the deleted paths. Log JSON is NOT touched
     (checkpoint-based log cleanup is `delta_checkpoint`'s domain)."""
     from simple_data_workflow_spark.sources.delta_reader import (
-        _strip_scheme,
         delta_snapshot_files,
     )
     from simple_data_workflow_spark.sources.delta_dv import dv_uuid_path
@@ -3462,9 +3440,7 @@ def delta_vacuum(
     if loc is not None:
         base = os.path.abspath(loc)
     else:
-        jvm, fs = tablefs.hadoop_fs(spark, path)
-        qualified = fs.makeQualified(jvm.org.apache.hadoop.fs.Path(path))
-        base = str(qualified.toUri().getPath())
+        base = _strip_scheme(tablefs.qualified_root(spark, path))
     prefix = f"{path}/"
 
     def key(p):
@@ -3518,17 +3494,14 @@ def delta_cleanup_log(
         return []
     cp_max = max(cps)
     horizon = int(time.time() * 1000) - int(retention_hours * 3600 * 1000)
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     deleted = []
     for v in sorted(commits):
         if v > cp_max:
             continue  # newer than the checkpoint: still load-bearing
-        p = jvm.org.apache.hadoop.fs.Path(
-            f"{path}/_delta_log/{v:020d}.json"
-        )
-        if int(fs.getFileStatus(p).getModificationTime()) >= horizon:
+        p = f"{path}/_delta_log/{v:020d}.json"
+        if tablefs.stat(spark, p)[1] >= horizon:
             continue
-        fs.delete(p, False)
+        tablefs.remove(spark, p)
         deleted.append(v)
     return deleted
 
@@ -3552,11 +3525,9 @@ def delta_restore(
     )
     if meta_tgt is None:
         raise ValueError(f"no metaData at or before version {version}")
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     for rel, a in adds_tgt.items():
-        dec = urllib.parse.unquote(rel)
-        full = dec if "://" in dec or dec.startswith("/") else f"{path}/{dec}"
-        if not fs.exists(jvm.org.apache.hadoop.fs.Path(full)):
+        full = _full_path(path, rel)
+        if not tablefs.exists(spark, full):
             raise FileNotFoundError(
                 f"cannot RESTORE to version {version}: data file {rel} "
                 "was removed (vacuumed) from the table directory"
@@ -3574,7 +3545,7 @@ def delta_restore(
                 if dv["storageType"] == "p"
                 else dv_uuid_path(path, dv["pathOrInlineDv"])
             )
-            if not fs.exists(jvm.org.apache.hadoop.fs.Path(sc)):
+            if not tablefs.exists(spark, sc):
                 raise FileNotFoundError(
                     f"cannot RESTORE to version {version}: the deletion-"
                     f"vector sidecar for {rel} was removed (vacuumed)"

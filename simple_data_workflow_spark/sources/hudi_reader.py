@@ -167,18 +167,6 @@ _LOG_FILE_RE = re.compile(
 )
 
 
-def _table_root(spark: SparkSession, path: str) -> str:
-    """The table root as its file paths are spelled: the plain local
-    path for local roots (no py4j), otherwise the qualified Hadoop path,
-    which keeps scheme and authority (``s3a://b/t`` stays ``s3a://b/t``)
-    so base and log paths resolve on the table's own filesystem."""
-    loc = tablefs.local_root(path)
-    if loc is not None:
-        return loc
-    jvm, fs = tablefs.hadoop_fs(spark, path)
-    return str(fs.makeQualified(jvm.org.apache.hadoop.fs.Path(path)))
-
-
 def _resolve_groups(
     spark: SparkSession, path: str, as_of: str | None = None
 ) -> tuple[dict, dict, set, set]:
@@ -197,7 +185,7 @@ def _resolve_groups(
     if not completed:
         raise ValueError(f"no completed commits in the Hudi timeline at {path}")
 
-    root = _table_root(spark, path)
+    root = tablefs.qualified_root(spark, path)
     staged = tablefs.staged_files(spark, path, skip=lambda d: d == ".hoodie")
 
     # (partition relpath, fileId) -> (instant, full path): latest valid

@@ -41,7 +41,6 @@ from pyspark.sql import functions as F
 
 from simple_data_workflow_spark.sources import tablefs
 from simple_data_workflow_spark.sources.hudi_reader import (
-    _table_root,
     hudi_snapshot_files,
     load_table_properties,
 )
@@ -152,7 +151,7 @@ def hudi_write(
 
 def _live_groups(spark: SparkSession, path: str):
     """(partition relpath, fileId) of every live file group."""
-    root = _table_root(spark, path)
+    root = tablefs.qualified_root(spark, path)
     for f in hudi_snapshot_files(spark, path):
         name = f.rsplit("/", 1)[1]
         fid = name.split("_", 1)[0]
@@ -368,7 +367,7 @@ def hudi_upsert(
     hit_paths = sorted({r["__file"] for r in hit})
     from simple_data_workflow_spark.sources.delta_reader import _cmp_path, _strip_scheme
 
-    root = _strip_scheme(_table_root(spark, path))
+    root = _strip_scheme(tablefs.qualified_root(spark, path))
     for p_ in hit_paths:
         local = _cmp_path(p_)  # scan spelling percent-encodes; the
         # partition/rel derivation below needs the DECODED path
@@ -1065,6 +1064,6 @@ def hudi_clean(
         m = log_re.match(name)
         if m and m.group("binstant") in dead_bases.get((part, m.group("fid")), ()):
             deleted.append(rel)
-    root = _table_root(spark, path)
+    root = tablefs.qualified_root(spark, path)
     deleted = [rel for rel in deleted if tablefs.remove(spark, f"{root}/{rel}")]
     return sorted(f"{root}/{rel}" for rel in deleted)

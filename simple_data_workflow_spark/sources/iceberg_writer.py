@@ -41,6 +41,7 @@ writer pays.
 from __future__ import annotations
 
 import json
+import re
 import time
 import urllib.parse
 import uuid
@@ -425,8 +426,10 @@ def _write_avro(
     boundary as Avro-JSON and are decoded by the reference
     ``jsonDecoder`` — the SCHEMA fixes every numeric width, so py4j's
     int-vs-long boxing ambiguity (which made small values in
-    ``["null","long"]`` unions unresolvable) cannot corrupt types."""
-    jvm, fs = tablefs.hadoop_fs(spark, path)
+    ``["null","long"]`` unions unresolvable) cannot corrupt types. The
+    file is built in memory (manifests are metadata-sized) and written
+    through ``tablefs``."""
+    jvm = spark._jvm
     schema = jvm.org.apache.avro.Schema.Parser().parse(schema_json)
     py_schema = json.loads(schema_json)
     reader = jvm.org.apache.avro.generic.GenericDatumReader(schema)
@@ -442,15 +445,16 @@ def _write_avro(
     dfw = jvm.org.apache.avro.file.DataFileWriter(writer)
     for k, val in (meta or {}).items():
         dfw.setMeta(k, val)
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    out = fs.create(jpath, False)
+    out = jvm.java.io.ByteArrayOutputStream()
     dfw.create(schema, out)
     try:
         for r in rows:
             dfw.append(to_rec(r))
     finally:
         dfw.close()
-    return int(fs.getFileStatus(jpath).getLen())
+    data = bytes(out.toByteArray())
+    tablefs.write_file(spark, path, data)
+    return len(data)
 
 
 # ---------------------------------------------------------------------------
@@ -610,6 +614,20 @@ def _publish_metadata_if_absent(
             spark, f"{path}/metadata/version-hint.text", str(version).encode()
         )
     return won
+
+
+def _publish_next_metadata(spark: SparkSession, path: str, meta: dict) -> bool:
+    """Publish ``meta`` at the next metadata version: one past the
+    highest ``v<N>.metadata.json`` under ``metadata/`` (1 on a new
+    table). Returns False when another writer took that version."""
+    version = 1
+    for name in tablefs.list_dir(spark, f"{path}/metadata") or []:
+        m = re.match(r"v(\d+)\.metadata\.json", name)
+        if m:
+            version = max(version, int(m.group(1)) + 1)
+    return _publish_metadata_if_absent(
+        spark, path, version, json.dumps(meta, indent=2)
+    )
 
 
 def _current_manifests(spark: SparkSession, path: str, meta: dict) -> list[dict]:
@@ -952,24 +970,11 @@ def iceberg_write(
                 int(f["record_count"]) for f in files
             )
             meta_out["row-lineage"] = True
-        version = 1
-        if exists:
-            import re as _re
-
-            jvm, fs = tablefs.hadoop_fs(spark, path)
-            for st in fs.listStatus(
-                jvm.org.apache.hadoop.fs.Path(f"{path}/metadata")
-            ):
-                m = _re.match(r"v(\d+)\.metadata\.json", st.getPath().getName())
-                if m:
-                    version = max(version, int(m.group(1)) + 1)
-        if _publish_metadata_if_absent(
-            spark, path, version, json.dumps(meta_out, indent=2)
-        ):
+        if _publish_next_metadata(spark, path, meta_out):
             return snapshot_id
         if mode != "append":
             raise IcebergConcurrentWrite(
-                f"metadata version {version} of {path} was committed by "
+                f"the next metadata version of {path} was committed by "
                 "another writer; re-run the overwrite against the new table"
             )
         cur_meta = load_table_metadata(spark, path)
@@ -1270,16 +1275,20 @@ def _stage_position_deletes_packed(
             packed.column("file_path").to_pylist(), packed.column("pos")
         )
     )
-    paths = []
-    pos_chunks = []
-    for fp, pos in per_file:
-        paths.extend([fp] * len(pos))
-        pos_chunks.append(pos)
+    # file_path is dictionary-encoded: each target path is held once,
+    # plus a 4-byte index per position, as _pos_delete_stage_cap budgets
+    file_path = pa.DictionaryArray.from_arrays(
+        np.repeat(
+            np.arange(len(per_file), dtype=np.int32),
+            [len(pos) for _, pos in per_file],
+        ),
+        pa.array([fp for fp, _ in per_file], pa.string()),
+    )
     schema = pa.schema(
         [
             pa.field(
                 "file_path",
-                pa.string(),
+                file_path.type,
                 nullable=False,
                 metadata={b"PARQUET:field_id": str(_POS_DELETE_FILE_PATH_ID).encode()},
             ),
@@ -1293,44 +1302,17 @@ def _stage_position_deletes_packed(
     )
     tbl = pa.table(
         {
-            "file_path": pa.array(paths, pa.string()),
-            "pos": pa.array(np.concatenate(pos_chunks), pa.int64()),
+            "file_path": file_path,
+            "pos": pa.array(np.concatenate([p for _, p in per_file]), pa.int64()),
         },
         schema=schema,
     )
-    name = f"delete-{uuid.uuid4().hex}-packed.parquet"
-    dest_rel = f"data/{name}"
-    loc_root = tablefs.local_root(path)
-    if loc_root is not None:
-        import os as _os
-
-        _os.makedirs(f"{loc_root}/data", exist_ok=True)
-        dest_local = f"{loc_root}/{dest_rel}"
-        pq.write_table(tbl, dest_local, compression="snappy")
-        size = _os.path.getsize(dest_local)
-    else:
-        import io as _io
-
-        buf = _io.BytesIO()
-        pq.write_table(tbl, buf, compression="snappy")
-        data = buf.getvalue()
-        jvm, fs = tablefs.hadoop_fs(spark, path)
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{path}/data"))
-        out = fs.create(
-            jvm.org.apache.hadoop.fs.Path(f"{path}/{dest_rel}"), False
-        )
-        try:
-            out.write(data)
-        finally:
-            out.close()
-        size = len(data)
-    return [
-        {
-            "path": f"{path}/{dest_rel}",
-            "size": int(size),
-            "record_count": int(tbl.num_rows),
-        }
-    ]
+    buf = pa.BufferOutputStream()
+    pq.write_table(tbl, buf, compression="snappy")
+    data = buf.getvalue().to_pybytes()
+    dest = f"{path}/data/delete-{uuid.uuid4().hex}-packed.parquet"
+    tablefs.write_file(spark, dest, data)
+    return [{"path": dest, "size": len(data), "record_count": int(tbl.num_rows)}]
 
 
 def _stage_position_deletes(
@@ -1352,8 +1334,6 @@ def _stage_position_deletes(
     sets take :func:`_stage_position_deletes_packed` (one Arrow
     transfer + driver-side write), unbounded/large ones keep the fully
     distributed staged write below."""
-    import pyarrow.parquet as pq
-
     if n_hint is not None and n_hint <= _pos_delete_stage_cap(spark):
         return _stage_position_deletes_packed(spark, path, matches, files)
     rows = _position_delete_frame(spark, matches, files)
@@ -1368,39 +1348,36 @@ def _stage_position_deletes(
             "pos", metadata={"parquet.field.id": _POS_DELETE_POS_ID}
         ),
     )
-    jvm, fs = tablefs.hadoop_fs(spark, path)
+    return _stage_delete_files(spark, path, rows, "delete")
+
+
+def _stage_delete_files(
+    spark: SparkSession, path: str, rows: DataFrame, prefix: str
+) -> list[dict]:
+    """Write ``rows`` into a dot-staging dir, move each non-empty task
+    file into ``data/`` as ``<prefix>-<uuid>-<task file>``, and return
+    the staged file dicts; zero-row task files are dropped."""
+    import pyarrow.parquet as pq
+
     staging = f"{path}/.staging-{uuid.uuid4().hex}"
     rows.write.mode("overwrite").parquet(staging)
+    # names read off the disk join decoded roots (see tablefs.staged_files)
+    src_root = tablefs.local_root(staging) or staging
     staged = []
-    staging_local = jvm.org.apache.hadoop.fs.Path(staging).toUri().getPath()
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(staging)):
-        name = st.getPath().getName()
+    for name, size, _ in tablefs.staged_files(spark, staging):
         if not name.endswith(".parquet"):
             continue
-        src = f"{staging_local}/{name}"
+        src = f"{src_root}/{name}"
         try:
             nrec = pq.ParquetFile(src).metadata.num_rows
         except Exception:
             nrec = spark.read.parquet(src).count()
         if nrec == 0:
             continue
-        dest = f"{path}/data/delete-{uuid.uuid4().hex}-{name}"
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{path}/data"))
-        if not fs.rename(
-            jvm.org.apache.hadoop.fs.Path(src),
-            jvm.org.apache.hadoop.fs.Path(dest),
-        ):
-            raise IOError(f"failed to move staged delete file {name}")
-        staged.append(
-            {
-                "path": dest,
-                "size": int(
-                    fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(dest)).getLen()
-                ),
-                "record_count": int(nrec),
-            }
-        )
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+        dest = f"{path}/data/{prefix}-{uuid.uuid4().hex}-{name}"
+        tablefs.move(spark, src, dest)
+        staged.append({"path": dest, "size": size, "record_count": int(nrec)})
+    tablefs.remove(spark, staging, recursive=True)
     return staged
 
 
@@ -1430,9 +1407,6 @@ def _publish_dml_snapshot(
     recomputes its whole edit per attempt; Iceberg runtimes fail such
     conflicts under serializable isolation — callers needing that
     should check the snapshot id before/after)."""
-    import re as _re
-
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     for attempt in range(_retries):
         now_ms = int(time.time() * 1000)
         # a caller that pre-stamped its staged files (DV blobs carry
@@ -1608,14 +1582,7 @@ def _publish_dml_snapshot(
         meta_out["last-sequence-number"] = seq
         meta_out["snapshots"] = list(meta.get("snapshots") or []) + [snapshot]
         meta_out["current-snapshot-id"] = snapshot_id
-        version = 1
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{path}/metadata")):
-            m = _re.match(r"v(\d+)\.metadata\.json", st.getPath().getName())
-            if m:
-                version = max(version, int(m.group(1)) + 1)
-        if _publish_metadata_if_absent(
-            spark, path, version, json.dumps(meta_out, indent=2)
-        ):
+        if _publish_next_metadata(spark, path, meta_out):
             return snapshot_id
         # lost the race: staged files still name valid targets —
         # re-resolve the metadata and re-publish
@@ -1691,11 +1658,8 @@ def iceberg_upgrade_format(
     DML (:func:`iceberg_dv_delete`); existing snapshots, manifests and
     v2 delete files stay valid per the spec's upgrade rules. Returns
     the table's (possibly already-satisfied) format version."""
-    import re as _re
-
     if target not in (2, 3):
         raise ValueError(f"can only upgrade to format-version 2 or 3, not {target}")
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     for attempt in range(_retries):
         meta = load_table_metadata(spark, path)
         fv = int(meta.get("format-version", 1))
@@ -1708,16 +1672,7 @@ def iceberg_upgrade_format(
             # v3 row lineage starts counting at the upgrade
             meta_out.setdefault("next-row-id", 0)
         meta_out["last-updated-ms"] = int(time.time() * 1000)
-        version = 1
-        for st in fs.listStatus(
-            jvm.org.apache.hadoop.fs.Path(f"{path}/metadata")
-        ):
-            m = _re.match(r"v(\d+)\.metadata\.json", st.getPath().getName())
-            if m:
-                version = max(version, int(m.group(1)) + 1)
-        if _publish_metadata_if_absent(
-            spark, path, version, json.dumps(meta_out, indent=2)
-        ):
+        if _publish_next_metadata(spark, path, meta_out):
             return target
     raise IcebergConcurrentWrite(
         f"format upgrade on {path} lost the metadata race {_retries} times"
@@ -1826,14 +1781,8 @@ def _stage_dv_deletes(
         return []
     seq_est = int(meta.get("last-sequence-number", 0)) + 1
     fbytes, descs = build_dv_file(sorted(dvs), snapshot_id, seq_est)
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     dest = f"{path}/data/dv-{uuid.uuid4().hex}.puffin"
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{path}/data"))
-    out = fs.create(jvm.org.apache.hadoop.fs.Path(dest), False)
-    try:
-        out.write(fbytes)
-    finally:
-        out.close()
+    tablefs.write_file(spark, dest, fbytes)
     return [
         {
             "path": dest,
@@ -2108,40 +2057,9 @@ def iceberg_equality_delete(
             for c in eq_cols
         ]
     )
-    jvm, fs = tablefs.hadoop_fs(spark, path)
-    staging = f"{path}/.staging-{uuid.uuid4().hex}"
-    staged_df.coalesce(1).write.mode("overwrite").parquet(staging)
-    import pyarrow.parquet as pq
-
-    staged = []
-    staging_local = jvm.org.apache.hadoop.fs.Path(staging).toUri().getPath()
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(staging)):
-        name = st.getPath().getName()
-        if not name.endswith(".parquet"):
-            continue
-        src = f"{staging_local}/{name}"
-        nrec = pq.ParquetFile(src).metadata.num_rows
-        if nrec == 0:
-            continue
-        dest = f"{path}/data/eqdelete-{uuid.uuid4().hex}-{name}"
-        fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{path}/data"))
-        if not fs.rename(
-            jvm.org.apache.hadoop.fs.Path(src),
-            jvm.org.apache.hadoop.fs.Path(dest),
-        ):
-            raise IOError(f"failed to move staged equality-delete {name}")
-        staged.append(
-            {
-                "path": dest,
-                "size": int(
-                    fs.getFileStatus(
-                        jvm.org.apache.hadoop.fs.Path(dest)
-                    ).getLen()
-                ),
-                "record_count": int(nrec),
-            }
-        )
-    fs.delete(jvm.org.apache.hadoop.fs.Path(staging), True)
+    staged = _stage_delete_files(
+        spark, path, staged_df.coalesce(1), "eqdelete"
+    )
     if not staged:
         return int(meta.get("current-snapshot-id") or -1)  # empty keys
 
@@ -2221,18 +2139,7 @@ def iceberg_equality_delete(
         meta_out["last-sequence-number"] = seq
         meta_out["snapshots"] = list(meta.get("snapshots") or []) + [snapshot]
         meta_out["current-snapshot-id"] = snapshot_id
-        version = 1
-        import re as _re
-
-        for st in fs.listStatus(
-            jvm.org.apache.hadoop.fs.Path(f"{path}/metadata")
-        ):
-            m = _re.match(r"v(\d+)\.metadata\.json", st.getPath().getName())
-            if m:
-                version = max(version, int(m.group(1)) + 1)
-        if _publish_metadata_if_absent(
-            spark, path, version, json.dumps(meta_out, indent=2)
-        ):
+        if _publish_next_metadata(spark, path, meta_out):
             return snapshot_id
         meta = load_table_metadata(spark, path)
     raise IcebergConcurrentWrite(
@@ -2309,9 +2216,8 @@ def iceberg_expire_snapshots(
         dead_files |= f - live_files
         dead_metas |= m - live_metas
 
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     for p in sorted(dead_files | dead_metas):
-        fs.delete(jvm.org.apache.hadoop.fs.Path(p), False)
+        tablefs.remove(spark, p)
 
     expired_ids = {int(s["snapshot-id"]) for s in expired}
     meta_out = dict(meta)
@@ -2319,16 +2225,7 @@ def iceberg_expire_snapshots(
         s for s in snaps if int(s["snapshot-id"]) not in expired_ids
     ]
     meta_out["last-updated-ms"] = int(time.time() * 1000)
-    version = 1
-    import re as _re
-
-    for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{path}/metadata")):
-        m = _re.match(r"v(\d+)\.metadata\.json", st.getPath().getName())
-        if m:
-            version = max(version, int(m.group(1)) + 1)
-    if not _publish_metadata_if_absent(
-        spark, path, version, json.dumps(meta_out, indent=2)
-    ):
+    if not _publish_next_metadata(spark, path, meta_out):
         raise IcebergConcurrentWrite(
             f"snapshot expiration on {path} lost the metadata race"
         )
@@ -2400,9 +2297,7 @@ def _evolve_schema(spark: SparkSession, path: str, mutate, _retries: int = 5) ->
     The new schema appends with the next schema-id and becomes current.
     Returns the new schema id; retries the metadata race."""
     import copy
-    import re as _re
 
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     for attempt in range(_retries):
         meta = load_table_metadata(spark, path)
         cur = _current_schema(meta)
@@ -2418,14 +2313,7 @@ def _evolve_schema(spark: SparkSession, path: str, mutate, _retries: int = 5) ->
         meta_out["schema"] = new_schema  # v1-compat single-schema field
         meta_out["last-updated-ms"] = int(time.time() * 1000)
         meta_out.update(extra or {})
-        version = 1
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{path}/metadata")):
-            m = _re.match(r"v(\d+)\.metadata\.json", st.getPath().getName())
-            if m:
-                version = max(version, int(m.group(1)) + 1)
-        if _publish_metadata_if_absent(
-            spark, path, version, json.dumps(meta_out, indent=2)
-        ):
+        if _publish_next_metadata(spark, path, meta_out):
             return new_id
     raise IcebergConcurrentWrite(
         f"schema evolution on {path} lost the metadata race {_retries} times"
@@ -2550,9 +2438,6 @@ def iceberg_rollback(
     stay monotonic (``last-sequence-number`` never rewinds — the spec's
     rule, so new row-level deletes still order after everything ever
     committed). Returns the restored snapshot id."""
-    import re as _re
-
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     for attempt in range(_retries):
         meta = load_table_metadata(spark, path)
         snaps = meta.get("snapshots") or []
@@ -2566,14 +2451,7 @@ def iceberg_rollback(
         meta_out = dict(meta)
         meta_out["current-snapshot-id"] = int(snapshot_id)
         meta_out["last-updated-ms"] = int(time.time() * 1000)
-        version = 1
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{path}/metadata")):
-            m = _re.match(r"v(\d+)\.metadata\.json", st.getPath().getName())
-            if m:
-                version = max(version, int(m.group(1)) + 1)
-        if _publish_metadata_if_absent(
-            spark, path, version, json.dumps(meta_out, indent=2)
-        ):
+        if _publish_next_metadata(spark, path, meta_out):
             return int(snapshot_id)
     raise IcebergConcurrentWrite(
         f"rollback on {path} lost the metadata race {_retries} times"
@@ -2611,9 +2489,6 @@ def iceberg_cherry_pick(
     before publishing. Refuses to cherry-pick a snapshot whose parent
     is not the CURRENT snapshot (a fast-forward publish would silently
     drop the intervening commits)."""
-    import re as _re
-
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     for attempt in range(_retries):
         meta = load_table_metadata(spark, path)
         snaps = meta.get("snapshots") or []
@@ -2642,14 +2517,7 @@ def iceberg_cherry_pick(
         meta_out = dict(meta)
         meta_out["current-snapshot-id"] = int(snapshot_id)
         meta_out["last-updated-ms"] = int(time.time() * 1000)
-        version = 1
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{path}/metadata")):
-            m = _re.match(r"v(\d+)\.metadata\.json", st.getPath().getName())
-            if m:
-                version = max(version, int(m.group(1)) + 1)
-        if _publish_metadata_if_absent(
-            spark, path, version, json.dumps(meta_out, indent=2)
-        ):
+        if _publish_next_metadata(spark, path, meta_out):
             return int(snapshot_id)
     raise IcebergConcurrentWrite(
         f"cherry-pick on {path} lost the metadata race {_retries} times"
@@ -2670,9 +2538,6 @@ def iceberg_update_spec(
     already named (the spec's same-field-same-id rule) and fresh ones
     continue from last-partition-id. v1 refuses (single-spec format).
     Returns the new spec id."""
-    import re as _re
-
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     for _attempt in range(_retries):
         meta = load_table_metadata(spark, path)
         if int(meta.get("format-version", 1)) < 2:
@@ -2747,14 +2612,7 @@ def iceberg_update_spec(
             [next_fid] + [int(f["field-id"]) for f in fields]
         )
         meta_out["last-updated-ms"] = int(time.time() * 1000)
-        version = 1
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{path}/metadata")):
-            m = _re.match(r"v(\d+)\.metadata\.json", st.getPath().getName())
-            if m:
-                version = max(version, int(m.group(1)) + 1)
-        if _publish_metadata_if_absent(
-            spark, path, version, json.dumps(meta_out, indent=2)
-        ):
+        if _publish_next_metadata(spark, path, meta_out):
             return new_id
     raise IcebergConcurrentWrite(
         f"spec update on {path} lost the metadata race {_retries} times"
@@ -2775,23 +2633,13 @@ def _mutate_refs(spark: SparkSession, path: str, mutate, _retries: int = 5):
     """CAS loop for metadata-only ref changes: ``mutate(meta)`` edits a
     dict copy in place (or raises); the copy publishes at the next
     metadata version. Returns the published metadata."""
-    import re as _re
-
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     for _attempt in range(_retries):
         meta = load_table_metadata(spark, path)
         meta_out = dict(meta)
         meta_out["refs"] = dict(meta.get("refs") or {})
         mutate(meta_out)
         meta_out["last-updated-ms"] = int(time.time() * 1000)
-        version = 1
-        for st in fs.listStatus(jvm.org.apache.hadoop.fs.Path(f"{path}/metadata")):
-            m = _re.match(r"v(\d+)\.metadata\.json", st.getPath().getName())
-            if m:
-                version = max(version, int(m.group(1)) + 1)
-        if _publish_metadata_if_absent(
-            spark, path, version, json.dumps(meta_out, indent=2)
-        ):
+        if _publish_next_metadata(spark, path, meta_out):
             return meta_out
     raise IcebergConcurrentWrite(
         f"ref change on {path} lost the metadata race {_retries} times"

@@ -13,6 +13,8 @@ from collections.abc import Sequence
 
 from pyspark.sql import DataFrame
 
+from simple_data_workflow_spark.sources import tablefs
+
 
 def write_parquet(
     df: DataFrame,
@@ -228,21 +230,24 @@ def compact_parquet(
     Thousands of tiny files tax the driver (listing, footer reads,
     per-file task scheduling) far more than the data itself; compaction
     rewrites the directory into ~``target_file_mb`` files. Sized from
-    the actual on-disk bytes via the Hadoop FS (no data scan), written
-    to a staging dir and atomically swapped in (rename), so a failure
-    mid-rewrite leaves the original table intact. Pass ``order_cols``
+    the actual on-disk bytes (no data scan), written to a staging dir
+    and swapped in by two directory renames (table to backup, staging
+    to table). A failure mid-rewrite leaves the original table intact;
+    a failed swap puts the backup back and raises. Pass ``order_cols``
     to re-cluster while compacting (``repartitionByRange`` +
     ``sortWithinPartitions`` — restores data-skipping stats that
     micro-batch appends destroy); otherwise a plain ``coalesce`` avoids
     any shuffle. Returns the new file count.
     """
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    total_bytes = fs.getContentSummary(jpath).getLength()
+    total_bytes = sum(
+        size
+        for rel, size, _ in tablefs.staged_files(spark, path)
+        if rel.endswith(".parquet")
+    )
     n_files = max(1, round(total_bytes / (target_file_mb * 1024 * 1024)))
     df = spark.read.parquet(path)
-    staging = path.rstrip("/") + "__compacting"
+    root = path.rstrip("/")
+    staging = root + "__compacting"
     if order_cols:
         (
             df.repartitionByRange(n_files, *order_cols)
@@ -252,16 +257,15 @@ def compact_parquet(
         )
     else:
         df.coalesce(n_files).write.mode("overwrite").parquet(staging)
-    backup = jvm.org.apache.hadoop.fs.Path(path.rstrip("/") + "__precompact")
-    staging_p = jvm.org.apache.hadoop.fs.Path(staging)
-    fs.rename(jpath, backup)
-    fs.rename(staging_p, jpath)
-    fs.delete(backup, True)
-    return sum(
-        1
-        for st in fs.listStatus(jpath)
-        if st.getPath().getName().endswith(".parquet")
-    )
+    backup = root + "__precompact"
+    tablefs.move(spark, root, backup)
+    try:
+        tablefs.move(spark, staging, root)
+    except BaseException:
+        tablefs.move(spark, backup, root)  # the backup is the only copy
+        raise
+    tablefs.remove(spark, backup, recursive=True)
+    return sum(1 for n in tablefs.list_dir(spark, root) if n.endswith(".parquet"))
 
 
 def write_orc(

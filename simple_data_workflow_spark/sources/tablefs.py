@@ -1,15 +1,19 @@
 """The table filesystem: how every table format's files are published,
-staged, moved, linked, read, listed and removed.
+staged, moved, linked, read, listed, stat'ed and removed.
 
-The tablelog, Delta, Iceberg and Hudi writers and readers call this
-module for those operations instead of branching on the filesystem
-themselves. It has two branches, chosen per path by :func:`local_root`:
+This is the only module in the package that touches the Hadoop
+``FileSystem``. The tablelog, Delta, Iceberg and Hudi writers and
+readers, and the parquet and streaming sinks, call it instead of
+branching on the filesystem themselves. It has two branches, chosen per
+path by its scheme:
 
-- **Local** (no scheme, or ``file:``): plain ``os`` calls. Each one is
+- **Local** (``file:``, or no scheme while the session's
+  ``fs.defaultFS`` is ``file:``): plain ``os`` calls. Each one is
   microseconds, where the same operation through the JVM is a py4j round
   trip (profiled DML roundtrips spent 1-1.5 s per query in that chatter
   alone).
-- **Non-local** (any other scheme): the Hadoop ``FileSystem`` of the
+- **Non-local** (any other scheme, or no scheme on a session whose
+  ``fs.defaultFS`` is not ``file:``): the Hadoop ``FileSystem`` of the
   session, through py4j (:func:`hadoop_fs`). Spark's own staging writes
   (``df.write.parquet``) go through Hadoop too, so this branch sees the
   same ``spark.hadoop.*`` settings and connectors those writes do.
@@ -17,6 +21,17 @@ themselves. It has two branches, chosen per path by :func:`local_root`:
   ``FileSystem.from_uri`` rejects ``s3a://`` and needs libhdfs for
   ``hdfs://``. It stays only in the executor-side streaming code, where
   there is no py4j.
+
+A path without a scheme thus resolves where Spark's own
+``read.parquet``/``write.parquet`` resolve it. :func:`local_root` alone
+answers from the spelling; it is for code that runs where the session
+is not at hand.
+
+Every path keeps the spelling its caller gave it. :func:`stat` gives a
+file's ``(size, mtime_ms)``, the commit-time fallback of the table
+logs; :func:`qualified_root` gives a table root as absolute file paths
+under it are spelled, keeping scheme and authority on non-local roots
+(``s3a://b/t`` never becomes ``/t`` on the default filesystem).
 
 Atomicity parity: :func:`publish_if_absent` publishes locally with
 ``os.link``, whose POSIX ``link(2)`` fails with EEXIST atomically, so
@@ -55,6 +70,23 @@ def local_root(path: str) -> str | None:
         parsed = urllib.parse.urlparse(path)
         return urllib.parse.unquote(parsed.path) or "/"
     return None
+
+
+def _local(spark, path: str) -> str | None:
+    """:func:`local_root`, except that a path without a scheme is local
+    only when the session's ``fs.defaultFS`` is ``file:``. That setting
+    is read once per SparkContext (a py4j round trip costs more than
+    the ``os`` call it guards), so a later change to it is not seen."""
+    loc = local_root(path)
+    if loc is None or path.startswith("file:"):
+        return loc
+    sc = spark.sparkContext
+    on_file = getattr(sc, "_tablefs_default_is_file", None)
+    if on_file is None:
+        default = sc._jsc.hadoopConfiguration().get("fs.defaultFS")
+        on_file = default is None or default.startswith("file:")
+        sc._tablefs_default_is_file = on_file
+    return loc if on_file else None
 
 
 def hadoop_fs(spark, path: str):
@@ -100,40 +132,67 @@ def write_if_absent(path: str, data: bytes) -> bool:
 
 def exists(spark, path: str) -> bool:
     """Whether a file or directory is at ``path``."""
-    loc = local_root(path)
+    loc = _local(spark, path)
     if loc is not None:
         return os.path.exists(loc)
     jvm, fs = hadoop_fs(spark, path)
     return bool(fs.exists(jvm.org.apache.hadoop.fs.Path(path)))
 
 
-def size(spark, path: str) -> int:
-    """Length in bytes of the file at ``path``; raises when it is absent."""
-    loc = local_root(path)
+def stat(spark, path: str) -> tuple[int, int]:
+    """``(size in bytes, mtime in ms)`` of the file or directory at
+    ``path``; raises when it is absent."""
+    loc = _local(spark, path)
     if loc is not None:
-        return os.path.getsize(loc)
+        st = os.stat(loc)
+        return st.st_size, st.st_mtime_ns // 1_000_000
     jvm, fs = hadoop_fs(spark, path)
-    return int(fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(path)).getLen())
+    st = fs.getFileStatus(jvm.org.apache.hadoop.fs.Path(path))
+    return int(st.getLen()), int(st.getModificationTime())
 
 
-def list_dir(spark, dirpath: str) -> list[str] | None:
-    """Entry names (not paths) in ``dirpath``; None when it is absent."""
-    loc = local_root(dirpath)
+def qualified_root(spark, path: str) -> str:
+    """``path`` as the absolute file paths under it are spelled: the
+    plain local path for local roots (no py4j), otherwise the qualified
+    Hadoop path, which keeps scheme and authority."""
+    loc = _local(spark, path)
     if loc is not None:
+        return loc
+    jvm, fs = hadoop_fs(spark, path)
+    return str(fs.makeQualified(jvm.org.apache.hadoop.fs.Path(path)))
+
+
+def list_dir(spark, dirpath: str) -> dict[str, int] | None:
+    """The entries in ``dirpath``, files and directories, as a dict from
+    name (not path) to mtime in ms, taken with the listing; None when
+    ``dirpath`` is absent. An entry removed while the directory is read
+    is left out."""
+    loc = _local(spark, dirpath)
+    if loc is not None:
+        out = {}
         try:
-            return os.listdir(loc)
+            with os.scandir(loc) as it:
+                for e in it:
+                    try:
+                        out[e.name] = e.stat().st_mtime_ns // 1_000_000
+                    except FileNotFoundError:
+                        pass
         except FileNotFoundError:
             return None
+        return out
     jvm, fs = hadoop_fs(spark, dirpath)
     p = jvm.org.apache.hadoop.fs.Path(dirpath)
     if not fs.exists(p):
         return None
-    return [st.getPath().getName() for st in fs.listStatus(p)]
+    return {
+        st.getPath().getName(): int(st.getModificationTime())
+        for st in fs.listStatus(p)
+    }
 
 
 def read_file(spark, path: str) -> bytes:
     """The whole content of the file at ``path``."""
-    loc = local_root(path)
+    loc = _local(spark, path)
     if loc is not None:
         with open(loc, "rb") as f:
             return f.read()
@@ -149,7 +208,7 @@ def publish_if_absent(spark, dirpath: str, name: str, data: bytes) -> bool:
     """Publish ``data`` as ``dirpath/name`` only if no file has that
     name — the commit point of every table log. Returns False only when
     another writer holds the name; every other failure raises."""
-    loc = local_root(dirpath)
+    loc = _local(spark, dirpath)
     if loc is not None:
         return write_if_absent(f"{loc}/{name}", data)
     jvm, fs = hadoop_fs(spark, dirpath)
@@ -183,7 +242,7 @@ def staged_files(spark, root: str, skip=None) -> list[tuple[str, int, int]]:
     ``local_root(root) or root``, never onto a ``file:`` URI, which
     :func:`local_root` percent-decodes whole."""
     out = []
-    loc = local_root(root)
+    loc = _local(spark, root)
     if loc is not None:
 
         def walk(d, prefix):
@@ -216,11 +275,17 @@ def staged_files(spark, root: str, skip=None) -> list[tuple[str, int, int]]:
 
 
 def move(spark, src: str, dst: str) -> None:
-    """Move the file ``src`` to ``dst``, creating ``dst``'s directory
-    first. Never overwrites; raises when the move does not happen."""
-    lsrc, ldst = local_root(src), local_root(dst)
+    """Move the file or directory ``src`` to ``dst``, creating ``dst``'s
+    parent directory first. Never overwrites; raises when the move does
+    not happen."""
+    lsrc, ldst = _local(spark, src), _local(spark, dst)
     if lsrc is not None and ldst is not None:
         os.makedirs(os.path.dirname(ldst), exist_ok=True)
+        if os.path.isdir(lsrc):
+            if os.path.lexists(ldst):
+                raise FileExistsError(f"cannot move {src} onto existing {dst}")
+            os.rename(lsrc, ldst)
+            return
         _drop_crc(ldst)
         os.link(lsrc, ldst)  # FileExistsError rather than overwrite
         os.remove(lsrc)
@@ -236,7 +301,7 @@ def link_or_copy(spark, src: str, dst: str) -> None:
     """Make ``dst`` hold the immutable file ``src``, keeping ``src``: a
     hard link locally, a Hadoop copy elsewhere. Idempotent — an existing
     ``dst`` is taken to be this same file, placed by an earlier try."""
-    lsrc, ldst = local_root(src), local_root(dst)
+    lsrc, ldst = _local(spark, src), _local(spark, dst)
     if lsrc is not None and ldst is not None:
         os.makedirs(os.path.dirname(ldst), exist_ok=True)
         try:
@@ -258,7 +323,7 @@ def link_or_copy(spark, src: str, dst: str) -> None:
 def write_file(spark, path: str, data: bytes) -> None:
     """Overwrite ``path`` with ``data`` — for pointer and property files
     that are rewritten in place, never for commit points."""
-    loc = local_root(path)
+    loc = _local(spark, path)
     if loc is not None:
         os.makedirs(os.path.dirname(loc), exist_ok=True)
         _drop_crc(loc)
@@ -278,7 +343,7 @@ def write_file(spark, path: str, data: bytes) -> None:
 def remove(spark, path: str, recursive: bool = False) -> bool:
     """Delete ``path`` (a directory tree when ``recursive``); False when
     it was already gone."""
-    loc = local_root(path)
+    loc = _local(spark, path)
     if loc is not None:
         try:
             if recursive and os.path.isdir(loc):

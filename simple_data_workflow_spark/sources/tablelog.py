@@ -985,13 +985,8 @@ def table_commit(
             empties = [f for f in files if f not in entry["stats"]]
             files = [f for f in files if f in entry["stats"]]
             entry["files"] = files
-            jvm_, fs_ = tablefs.hadoop_fs(spark, path)
             for f in empties:
-                with contextlib.suppress(Exception):
-                    fs_.delete(
-                        jvm_.org.apache.hadoop.fs.Path(_data_path(path, f)),
-                        False,
-                    )
+                tablefs.remove(spark, _data_path(path, f))
     if declared:
         entry["partition_by"] = partition_by
     if bloom_declared:
@@ -1793,15 +1788,12 @@ def table_version_at_timestamp(
     entries, _ = _list_log(spark, path)
     if not entries:
         raise FileNotFoundError(f"no table log under {path}")
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     best: int | None = None
     for v in entries:
         e = _read_json(spark, path, f"{v:08d}.json")
         e_ts = e.get("ts")
         if e_ts is None:
-            e_ts = fs.getFileStatus(
-                jvm.org.apache.hadoop.fs.Path(f"{path}/_log/{v:08d}.json")
-            ).getModificationTime()
+            e_ts = tablefs.stat(spark, f"{path}/_log/{v:08d}.json")[1]
         if int(e_ts) <= ts_ms:
             best = v  # entries are sorted: last match wins
     if best is None:
@@ -1855,7 +1847,6 @@ def table_history(spark: SparkSession, path: str) -> list[dict]:
     operability surface, answered from metadata alone."""
     out = []
     entries, _ = _list_log(spark, path)
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     for v in entries:
         e = _read_json(spark, path, f"{v:08d}.json")
         stats = e.get("stats")
@@ -1868,9 +1859,7 @@ def table_history(spark: SparkSession, path: str) -> list[dict]:
         # file copies); legacy entries fall back to log-file mtime
         ts_ms = e.get("ts")
         if ts_ms is None:
-            ts_ms = fs.getFileStatus(
-                jvm.org.apache.hadoop.fs.Path(f"{path}/_log/{v:08d}.json")
-            ).getModificationTime()
+            ts_ms = tablefs.stat(spark, f"{path}/_log/{v:08d}.json")[1]
         out.append(
             {
                 "version": v,
@@ -1904,19 +1893,12 @@ def _register_clone_backref(
     which vacuum garbage-collects when it finds no log at ``dst`` —
     the safe order; the reverse would let a racing vacuum reap files
     the just-committed clone references)."""
-    jvm, fs = tablefs.hadoop_fs(spark, src_root)
-    fs.mkdirs(jvm.org.apache.hadoop.fs.Path(f"{src_root}/_clones"))
-    p = jvm.org.apache.hadoop.fs.Path(
-        f"{src_root}/_clones/{uuid.uuid4().hex}.json"
+    tablefs.write_file(
+        spark,
+        f"{src_root}/_clones/{uuid.uuid4().hex}.json",
+        json.dumps({"dst": _abs_root(dst), "ts": int(time.time() * 1000)})
+        .encode("utf-8"),
     )
-    out = fs.create(p, False)
-    try:
-        out.write(
-            json.dumps({"dst": _abs_root(dst), "ts": int(time.time() * 1000)})
-            .encode("utf-8")
-        )
-    finally:
-        out.close()
 
 
 def _clone_referenced_names(
@@ -1936,25 +1918,19 @@ def _clone_referenced_names(
     and reaping it would let a later vacuum corrupt the live clone
     (the r9 TOCTOU). ``gc_before_ms=None`` disables GC outright.
     Cost ∝ clone count × clone log size — metadata, never data."""
-    jvm, fs = tablefs.hadoop_fs(spark, path)
-    cdir = jvm.org.apache.hadoop.fs.Path(f"{path}/_clones")
-    if not fs.exists(cdir):
+    cdir = f"{path}/_clones"
+    names = tablefs.list_dir(spark, cdir)
+    if names is None:
         return set()
     data_prefix = f"{_abs_root(path)}/data"
     out: set[str] = set()
-    for st in fs.listStatus(cdir):
-        name = st.getPath().getName()
+    for name in names:
         if not name.endswith(".json"):
             continue
-        stream = fs.open(st.getPath())
-        try:
-            marker = json.loads(
-                bytes(
-                    jvm.org.apache.commons.io.IOUtils.toByteArray(stream)
-                ).decode("utf-8")
-            )
-        finally:
-            stream.close()
+        marker_path = f"{cdir}/{name}"
+        marker = json.loads(
+            tablefs.read_file(spark, marker_path).decode("utf-8")
+        )
         dst = marker.get("dst")
         # age gate: a marker younger than the retention horizon may
         # belong to a clone whose commit is still in flight — keep it
@@ -1968,7 +1944,7 @@ def _clone_referenced_names(
             entries, cps = [], []
         if not entries and not cps:
             if gc and old_enough:
-                fs.delete(st.getPath(), False)  # clone gone/never landed
+                tablefs.remove(spark, marker_path)  # clone gone/never landed
             continue
         refs: set[str] = set()
         for v in entries:
@@ -1984,7 +1960,7 @@ def _clone_referenced_names(
         }
         if not ours:
             if gc and old_enough:
-                fs.delete(st.getPath(), False)  # materialized: release
+                tablefs.remove(spark, marker_path)  # materialized: release
             continue
         out.update(ours)
     return out
@@ -2039,18 +2015,15 @@ def table_vacuum(
         referenced.update(
             _clone_referenced_names(spark, path, gc_before_ms=horizon_ms)
         )
-    jvm, fs = tablefs.hadoop_fs(spark, path)
-    data_dir = jvm.org.apache.hadoop.fs.Path(f"{path}/data")
-    if not fs.exists(data_dir):
-        return 0
+    entries = tablefs.list_dir(spark, f"{path}/data") or {}
     removed = 0
-    for st in fs.listStatus(data_dir):
-        name = st.getPath().getName()
-        if st.getModificationTime() > horizon_ms:
+    for name, mtime_ms in entries.items():
+        if mtime_ms > horizon_ms:
             continue  # young: may belong to an in-flight commit
-        if st.isDirectory() or name not in referenced:
+        # referenced names are data files, so a directory never matches
+        if name not in referenced:
             if not dry_run:
-                fs.delete(st.getPath(), True)
+                tablefs.remove(spark, f"{path}/data/{name}", recursive=True)
             removed += 1
     return removed
 
@@ -3250,7 +3223,9 @@ def table_compact(
     conflict rather than being silently dropped. Returns the new
     version."""
     state = _resolve_state(spark, path, None)
-    total = sum(tablefs.size(spark, _data_path(path, f)) for f in state["files"])
+    total = sum(
+        tablefs.stat(spark, _data_path(path, f))[0] for f in state["files"]
+    )
     n_files = num_files or max(1, round(total / (target_file_mb * 1024 * 1024)))
     snapshot = _read_files(
         spark, path, state["files"], state["schema"], dvs=state.get("dvs"),
@@ -3312,7 +3287,7 @@ def table_compact_small(
     threshold = small_file_mb * 1024 * 1024
     small, small_bytes = [], 0
     for f in state["files"]:
-        sz = tablefs.size(spark, _data_path(path, f))
+        sz = tablefs.stat(spark, _data_path(path, f))[0]
         if sz < threshold:
             small.append(f)
             small_bytes += sz
@@ -3396,7 +3371,6 @@ def table_truncate_history(
             },
         )
     state = _resolve_state(spark, path, cut)
-    jvm, fs = tablefs.hadoop_fs(spark, path)
     cp_name = f"{cut:08d}.checkpoint.json"
     payload = {
         "files": state["files"],
@@ -3426,7 +3400,7 @@ def table_truncate_history(
         payload["dvs"] = state["dvs"]
         payload["dv_counts"] = state.get("dv_counts", {})
     _write_json_if_absent(spark, path, cp_name, payload)
-    if not fs.exists(jvm.org.apache.hadoop.fs.Path(f"{path}/_log/{cp_name}")):
+    if not tablefs.exists(spark, f"{path}/_log/{cp_name}"):
         raise RuntimeError(
             f"checkpoint {cp_name} failed to publish; aborting truncation "
             "with all history intact"
@@ -3434,14 +3408,11 @@ def table_truncate_history(
     removed = 0
     for v in entries:
         if v < cut:
-            fs.delete(jvm.org.apache.hadoop.fs.Path(f"{path}/_log/{v:08d}.json"), False)
+            tablefs.remove(spark, f"{path}/_log/{v:08d}.json")
             removed += 1
     for c in cps:
         if c < cut:
-            fs.delete(
-                jvm.org.apache.hadoop.fs.Path(f"{path}/_log/{c:08d}.checkpoint.json"),
-                False,
-            )
+            tablefs.remove(spark, f"{path}/_log/{c:08d}.checkpoint.json")
     return removed
 
 
@@ -4092,7 +4063,7 @@ def table_files_df(
         st = state["stats"].get(f, {})
         parts = st.get("__parts")
         try:
-            size = tablefs.size(spark, _data_path(path, f))
+            size = tablefs.stat(spark, _data_path(path, f))[0]
         except Exception:
             size = None  # referenced file on a dead mount: surface, don't die
         rows.append(

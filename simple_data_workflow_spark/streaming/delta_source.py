@@ -40,7 +40,6 @@ posture as the native tablelog source.
 from __future__ import annotations
 
 import json
-import urllib.parse
 from dataclasses import dataclass, field
 
 from pyspark.sql.datasource import (
@@ -49,6 +48,8 @@ from pyspark.sql.datasource import (
     InputPartition,
 )
 from pyspark.sql.types import StructType
+
+from simple_data_workflow_spark.sources.delta_reader import _full_path
 
 VERSION_COL = "_commit_version"
 
@@ -235,12 +236,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                 # carried-over rows, so DML commits tail exactly-once
                 # without allowRewrites
                 for c in cdcs:
-                    rel = urllib.parse.unquote(c["path"])
-                    full = (
-                        rel
-                        if "://" in rel or rel.startswith("/")
-                        else f"{root}/{rel}"
-                    )
+                    full = _full_path(root, c["path"])
                     pv = {}
                     raw_pv = c.get("partitionValues") or {}
                     for col in self._part_cols:
@@ -281,12 +277,7 @@ class DeltaStreamReader(DataSourceStreamReader):
                     "semantics"
                 )
             for a in data_adds:
-                rel = urllib.parse.unquote(a["path"])
-                full = (
-                    rel
-                    if "://" in rel or rel.startswith("/")
-                    else f"{root}/{rel}"
-                )
+                full = _full_path(root, a["path"])
                 dv_pos = None
                 if a.get("deletionVector"):
                     from simple_data_workflow_spark.sources.delta_dv import (

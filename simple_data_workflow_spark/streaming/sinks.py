@@ -24,20 +24,7 @@ from collections.abc import Sequence
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-
-def _target_exists(spark: SparkSession, path: str) -> bool:
-    """Explicit existence probe via the Hadoop FileSystem API.
-
-    Existence is checked up front — NOT inferred from a read failure —
-    so that a transient FS error or schema-drift AnalysisException during
-    the merge propagates and fails the streaming query, instead of being
-    mistaken for "first batch" and silently overwriting touched
-    partitions with batch-only rows (which would drop existing keys and
-    void the idempotent-upsert guarantee)."""
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    return bool(fs.exists(jpath))
+from simple_data_workflow_spark.sources import tablefs
 
 
 def merge_upsert_partitions(
@@ -59,10 +46,12 @@ def merge_upsert_partitions(
     if not touched:
         return
     batch_df = batch_df.localCheckpoint(eager=True)  # sever from the streaming plan
-    if _target_exists(spark, target_path):
-        # Any failure past this point (FS flake, schema drift breaking
-        # unionByName/join analysis) propagates and fails the query —
-        # never fall back to batch-only, which would drop existing keys.
+    # existence is probed up front, NOT inferred from a read failure:
+    # any failure past this point (FS flake, schema drift breaking
+    # unionByName/join analysis) propagates and fails the query —
+    # never fall back to batch-only, which would drop existing keys
+    # and void the idempotent-upsert guarantee
+    if tablefs.exists(spark, target_path):
         existing = spark.read.parquet(target_path).where(
             F.col(partition_col).isin(touched)
         )
@@ -115,17 +104,8 @@ def streaming_upsert_sink(
 
 
 def _list_versions(spark: SparkSession, state_path: str) -> list[int]:
-    jvm = spark._jvm
-    jpath = jvm.org.apache.hadoop.fs.Path(state_path)
-    fs = jpath.getFileSystem(spark._jsc.hadoopConfiguration())
-    if not fs.exists(jpath):
-        return []
-    out = []
-    for st in fs.listStatus(jpath):
-        name = st.getPath().getName()
-        if name.startswith("v="):
-            out.append(int(name[2:]))
-    return sorted(out)
+    names = tablefs.list_dir(spark, state_path) or []
+    return sorted(int(n[2:]) for n in names if n.startswith("v="))
 
 
 def read_materialized_agg(spark: SparkSession, state_path: str) -> DataFrame:
@@ -188,12 +168,8 @@ def apply_incremental_batch(
     merged = incremental_agg_apply(state, cdc, list(group_cols))
     merged.write.mode("overwrite").parquet(f"{state_path}/v={batch_id}")
     # prune old versions, keeping the newest `keep_versions`
-    jvm = spark._jvm
-    fs = jvm.org.apache.hadoop.fs.Path(state_path).getFileSystem(
-        spark._jsc.hadoopConfiguration()
-    )
     for old in versions[:-keep_versions] if keep_versions else versions:
-        fs.delete(jvm.org.apache.hadoop.fs.Path(f"{state_path}/v={old}"), True)
+        tablefs.remove(spark, f"{state_path}/v={old}", recursive=True)
 
 
 def streaming_incremental_agg(
@@ -263,32 +239,20 @@ def streaming_table_append_sink(
         checkpoint_dir.rstrip("/").encode("utf-8")
     ).hexdigest()[:16]
 
-    def _hwm_path(jvm):
-        return jvm.org.apache.hadoop.fs.Path(f"{checkpoint_dir}/_tablelog_hwm")
+    hwm_path = f"{checkpoint_dir}/_tablelog_hwm"
 
     def _read_hwm(spark: SparkSession) -> int:
-        jvm = spark._jvm
-        fs = _hwm_path(jvm).getFileSystem(spark._jsc.hadoopConfiguration())
-        if not fs.exists(_hwm_path(jvm)):
+        if not tablefs.exists(spark, hwm_path):
             return -1
-        stream = fs.open(_hwm_path(jvm))
-        try:
-            data = bytes(jvm.org.apache.commons.io.IOUtils.toByteArray(stream))
-        finally:
-            stream.close()
-        rec = _json.loads(data.decode("utf-8"))
+        rec = _json.loads(tablefs.read_file(spark, hwm_path).decode("utf-8"))
         return int(rec["hwm"]) if rec.get("app_id") == app_id else -1
 
     def _write_hwm(spark: SparkSession, batch_id: int) -> None:
-        jvm = spark._jvm
-        fs = _hwm_path(jvm).getFileSystem(spark._jsc.hadoopConfiguration())
-        out = fs.create(_hwm_path(jvm), True)  # overwrite: monotonic value
-        try:
-            out.write(
-                _json.dumps({"app_id": app_id, "hwm": int(batch_id)}).encode()
-            )
-        finally:
-            out.close()
+        tablefs.write_file(  # overwrite: monotonic value
+            spark,
+            hwm_path,
+            _json.dumps({"app_id": app_id, "hwm": int(batch_id)}).encode(),
+        )
 
     def fold(batch_df: DataFrame, batch_id: int) -> None:
         spark = batch_df.sparkSession

@@ -1116,7 +1116,7 @@ def test_non_local_root_keeps_scheme_and_authority(spark, monkeypatch):
             (f"p=1/.fid-1_{t}.log.1_0-1-0", 5, 0),
         ],
     )
-    assert hudi_reader._table_root(spark, root) == root
+    assert tablefs.qualified_root(spark, root) == root
     groups, logs, _c, _r = hudi_reader._resolve_groups(spark, root)
     assert groups == {("p=1", "fid-1"): (t, f"{root}/p=1/fid-1_0-1-0_{t}.parquet")}
     assert logs == {("p=1", "fid-1"): [(1, f"{root}/p=1/.fid-1_{t}.log.1_0-1-0")]}
